@@ -1,6 +1,7 @@
 package graft
 
 import graft.Geo._
+import graft.io.Tables
 import graft.tools.SpatialJoin
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -45,8 +46,8 @@ object SpatialScaleBench {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    def customers = spark.read.parquet(s"$sfDir/customer.parquet")
-    def suppliers = spark.read.parquet(s"$sfDir/supplier.parquet")
+    def customers = Tables.parquet(spark, s"$sfDir/customer.parquet")
+    def suppliers = Tables.parquet(spark, s"$sfDir/supplier.parquet")
 
     /** Points/diamonds in [0,1000)^2 per tile — the sjoin catalog
       * family's SHARED coordinate recipe (graft.queries.Queries), so

@@ -952,10 +952,11 @@ object Dedup {
    * The returned (id, component) frame is a narrow projection over the
    * final round's checkpoint (already materialized by the convergence
    * check); `unpersist()` is a harmless no-op on it.
-   * If `maxIters` rounds elapse before the fixpoint (impossible for
-   * clusters of diameter < maxIters), the partially-converged labels
-   * are returned as-is: components may then be split, never merged
-   * wrongly — raise `maxIters` for long-chain graphs.
+   * If labels still change after `maxIters` rounds (a component too
+   * long to label in that many rounds), it throws an
+   * IllegalStateException naming the rounds run and the labels still
+   * changing: partial labels would split components silently. Raise
+   * `maxIters` or use the star variant for long-chain graphs.
    */
   def connectedComponents(edges: DataFrame, aCol: String, bCol: String,
                           maxIters: Int = 20): DataFrame = {
@@ -1008,6 +1009,9 @@ object Dedup {
     }
     sym.unpersist(false)
     e.unpersist(false)
+    if (changed > 0) throw new IllegalStateException(
+      s"connectedComponents did not converge in $i rounds: " +
+        s"$changed labels still changed in the last round")
     labels
   }
 
@@ -1094,7 +1098,9 @@ object Dedup {
    * component)}. Convergence is detected by an (edge count, xxhash sum)
    * signature — any structural change moves it. Returns (id, component
    * = min reachable id) for every node incident to an edge, persisted
-   * (caller unpersists), exactly like [[connectedComponents]].
+   * (caller unpersists), exactly like [[connectedComponents]]. If the
+   * signature still moves after `maxIters` rounds, it throws an
+   * IllegalStateException naming the rounds run and the edges left.
    */
   def connectedComponentsStar(edges: DataFrame, aCol: String, bCol: String,
                               maxIters: Int = 50): DataFrame = {
@@ -1167,6 +1173,9 @@ object Dedup {
       sig = nsig
       i += 1
     }
+    if (!converged) throw new IllegalStateException(
+      s"connectedComponentsStar did not converge in $i rounds: " +
+        s"the edge list (${sig._1} edges) still changed in the last round")
 
     // fixpoint edges are exactly {(node, component min) : node != min};
     // add the roots' self-labels to cover every incident node

@@ -688,6 +688,12 @@ class PipelineSpec extends AnyFunSuite {
     assert(comps.select("component").distinct().collect()
       .map(_.getLong(0)).toSeq == Seq(0L))
     comps.unpersist()
+    // label propagation hits its cap on the same chain: it must fail
+    // loudly, never return the chain split into partial components
+    val capped = intercept[IllegalStateException](
+      Dedup.connectedComponents(chain, "a", "b"))
+    assert(capped.getMessage.contains("did not converge in 20 rounds"),
+      capped.getMessage)
     // random multi-component graphs over several densities/seeds:
     // star == min-label propagation == the ground truth both encode
     for ((seed, nEdges, nNodes) <- Seq((7, 200, 80), (13, 40, 100), (29, 400, 60))) {
