@@ -3,9 +3,10 @@
 
 Usage:
     python3 scripts/perf_ab.py --parent DIR --change DIR --workload spatial --pairs 10
-        [--seed0 1000] [--seconds 12] [--out runs.jsonl]
+        [--seed0 1000] [--out runs.jsonl]
 
 Runs `python3 perfbench/run.py --trace 0` in each checkout, `--pairs` times,
+for the run length BENCHMARK.json sets (`run_seconds`),
 alternating which side runs first (pair i uses seed seed0 + i on both
 sides). For each end-to-end metric of the change's BENCHMARK.json it prints
 each side's median and quartiles, the change/parent ratio of the medians,
@@ -47,20 +48,20 @@ def main():
     ap.add_argument("--workload", required=True)
     ap.add_argument("--pairs", required=True, type=int)
     ap.add_argument("--seed0", type=int, default=1000)
-    ap.add_argument("--seconds", type=int, default=12)
     ap.add_argument("--out", type=pathlib.Path, help="append every run's result here as JSON lines")
     args = ap.parse_args()
     if args.pairs < 2:
         sys.exit("[perf_ab] --pairs must be at least 2")
 
     spec = json.loads((args.change / "BENCHMARK.json").read_text())
+    seconds = spec["run_seconds"]
     sides = {"parent": args.parent, "change": args.change}
     runs = {"parent": [], "change": []}
     for i in range(args.pairs):
         seed = args.seed0 + i
         order = ("parent", "change") if i % 2 == 0 else ("change", "parent")
         for side in order:
-            result = run(sides[side], args.workload, seed, args.seconds)
+            result = run(sides[side], args.workload, seed, seconds)
             runs[side].append(result)
             metrics = {k: round(v["value"], 4) for k, v in result["metrics"].items()}
             print(f"[perf_ab] pair {i + 1}/{args.pairs} seed {seed} {side}: {json.dumps(metrics)}",

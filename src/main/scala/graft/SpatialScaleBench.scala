@@ -46,8 +46,8 @@ object SpatialScaleBench {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    def customers = Tables.parquet(spark, s"$sfDir/customer.parquet")
-    def suppliers = Tables.parquet(spark, s"$sfDir/supplier.parquet")
+    def customers = Tables.table(spark, sfDir, "customer")
+    def suppliers = Tables.table(spark, sfDir, "supplier")
 
     /** Points/diamonds in [0,1000)^2 per tile — the sjoin catalog
       * family's SHARED coordinate recipe (graft.queries.Queries), so

@@ -12,21 +12,20 @@ import org.apache.spark.sql.execution.datasources.parquet.FooterSchema
   * ([[FooterSchema]]) and opens the file with that schema, so the
   * DataFrame is the one `spark.read.parquet` returns, without the job.
   *
-  * Anything else goes to plain `spark.read.parquet`, so Spark's own
-  * behaviour and errors stay: a directory or a glob (which file Spark
-  * infers from depends on its file index), a file name Spark's listing
-  * hides (leading `_` or `.`), a missing file, and a footer that yields
-  * no schema (a corrupt file, skipped or not). No schema is cached, so
-  * none can go stale. */
+  * Anything [[FooterSchema.ofFile]] does not take (a directory, a
+  * glob, a name Spark's listing hides, a missing file, a footer that
+  * yields no schema) goes to plain `spark.read.parquet`, so Spark's
+  * own behaviour and errors stay. No schema is cached, so none can go
+  * stale. */
 object Tables {
 
-  def parquet(spark: SparkSession, path: String): DataFrame = {
-    val name = path.substring(path.lastIndexOf('/') + 1)
-    val plain = path.exists("{}[]*?\\".contains(_)) ||
-      name.startsWith("_") || name.startsWith(".")
-    (if (plain) None else FooterSchema.ofFile(spark, path)) match {
+  def parquet(spark: SparkSession, path: String): DataFrame =
+    FooterSchema.ofFile(spark, path) match {
       case Some(schema) => spark.read.schema(schema).parquet(path)
       case None => spark.read.parquet(path)
     }
-  }
+
+  /** The catalog table `name` of the scale-factor dir `dir`. */
+  def table(spark: SparkSession, dir: String, name: String): DataFrame =
+    parquet(spark, s"$dir/$name.parquet")
 }

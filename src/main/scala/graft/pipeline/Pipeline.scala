@@ -952,11 +952,12 @@ object Dedup {
    * The returned (id, component) frame is a narrow projection over the
    * final round's checkpoint (already materialized by the convergence
    * check); `unpersist()` is a harmless no-op on it.
-   * If labels still change after `maxIters` rounds (a component too
-   * long to label in that many rounds), it throws an
-   * IllegalStateException naming the rounds run and the labels still
-   * changing: partial labels would split components silently. Raise
-   * `maxIters` or use the star variant for long-chain graphs.
+   * If round `maxIters` still lowered a label, a check-only round
+   * decides: labels at the fixpoint are returned, and labels that
+   * would still change throw an IllegalStateException naming the
+   * rounds run and the labels left (partial labels would split
+   * components silently). Raise `maxIters` or use the star variant
+   * for long-chain graphs.
    */
   def connectedComponents(edges: DataFrame, aCol: String, bCol: String,
                           maxIters: Int = 20): DataFrame = {
@@ -991,14 +992,16 @@ object Dedup {
       .select(col("__s").as("id"),
         least(col("__s"), col("__nbr")).as("component"))
       .localCheckpoint(false)
+    def nbrMin(cur: DataFrame): DataFrame =
+      sym.join(cur, sym("__d") === cur("id"))
+        .groupBy(col("__s"))
+        .agg(min(col("component")).as("__nbr"))
     var changed = 1L
     var i = 0
     while (changed > 0 && i < maxIters) {
-      val nbrMin = sym.join(labels, sym("__d") === labels("id"))
-        .groupBy(col("__s"))
-        .agg(min(col("component")).as("__nbr"))
+      val nbr = nbrMin(labels)
       val updated = labels
-        .join(nbrMin, labels("id") === nbrMin("__s"), "left")
+        .join(nbr, labels("id") === nbr("__s"), "left")
         .select(col("id"), col("component"),
           least(col("component"), coalesce(col("__nbr"), col("component")))
             .as("__next"))
@@ -1007,11 +1010,18 @@ object Dedup {
       labels = updated.select(col("id"), col("__next").as("component"))
       i += 1
     }
+    // the cap round still lowered labels: count what one more round
+    // would lower, so a fixpoint reached in that round is not refused
+    if (changed > 0) {
+      val nbr = nbrMin(labels)
+      changed = labels.join(nbr, labels("id") === nbr("__s"))
+        .where(col("__nbr") < col("component")).count()
+    }
     sym.unpersist(false)
     e.unpersist(false)
     if (changed > 0) throw new IllegalStateException(
       s"connectedComponents did not converge in $i rounds: " +
-        s"$changed labels still changed in the last round")
+        s"$changed labels would still change in round ${i + 1}")
     labels
   }
 
@@ -1099,8 +1109,10 @@ object Dedup {
    * signature — any structural change moves it. Returns (id, component
    * = min reachable id) for every node incident to an edge, persisted
    * (caller unpersists), exactly like [[connectedComponents]]. If the
-   * signature still moves after `maxIters` rounds, it throws an
-   * IllegalStateException naming the rounds run and the edges left.
+   * signature still moved in round `maxIters`, one more round decides:
+   * an edge list already at the fixpoint is labelled, and one that
+   * would still change throws an IllegalStateException naming the
+   * rounds run and the edges left.
    */
   def connectedComponentsStar(edges: DataFrame, aCol: String, bCol: String,
                               maxIters: Int = 50): DataFrame = {
@@ -1173,9 +1185,16 @@ object Dedup {
       sig = nsig
       i += 1
     }
-    if (!converged) throw new IllegalStateException(
-      s"connectedComponentsStar did not converge in $i rounds: " +
-        s"the edge list (${sig._1} edges) still changed in the last round")
+    // the cap round still moved the signature: one more round tells a
+    // fixpoint from an edge list still changing. Its output is kept, as
+    // the labels below need a round's (node, min) orientation
+    if (!converged) {
+      val next = smallStar(largeStar(e)).localCheckpoint(false)
+      if (signature(next) != sig) throw new IllegalStateException(
+        s"connectedComponentsStar did not converge in $i rounds: " +
+          s"the edge list (${sig._1} edges) would still change in round ${i + 1}")
+      e = next
+    }
 
     // fixpoint edges are exactly {(node, component min) : node != min};
     // add the roots' self-labels to cover every incident node

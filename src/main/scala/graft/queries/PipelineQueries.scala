@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.io.Tables
+import graft.io.Tables.{table => t}
 import graft.pipeline.{Decontaminate, Dedup, Funnels, Graphs, Multimodal, Retrieval, Sampling, Scrub, Similarity, Sketches, TextAnalysis, Tx}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -26,13 +26,13 @@ object PipelineQueries {
 
   /** documents plus exact copies of every 10th doc (id +100000). */
   private def docsWithPlanted(s: SparkSession, dir: String): DataFrame = {
-    val d = Tables.parquet(s, s"$dir/documents.parquet").select(col("doc_id"), col("text"))
+    val d = t(s, dir, "documents").select(col("doc_id"), col("text"))
     d.unionAll(d.where(col("doc_id") % 10 === 0)
       .select((col("doc_id") + 100000).as("doc_id"), col("text")))
   }
 
   private def embWithPlanted(s: SparkSession, dir: String): DataFrame = {
-    val e = Tables.parquet(s, s"$dir/embeddings.parquet").select(col("vec_id"), col("embedding"))
+    val e = t(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
     e.unionAll(e.where(col("vec_id") % 10 === 0)
       .select((col("vec_id") + 100000).as("vec_id"), col("embedding")))
   }
@@ -40,19 +40,19 @@ object PipelineQueries {
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // -- text analysis ---------------------------------------------------
     "lang_id_counts" -> ((s, dir) => {
-      Tables.parquet(s, s"$dir/documents.parquet")
+      t(s, dir, "documents")
         .withColumn("lang_pred", TextAnalysis.langId(col("text")))
         .groupBy(col("lang_pred")).agg(count(lit(1)).as("n"))
     }),
 
     "quality_flags" -> ((s, dir) => {
       val cols = TextAnalysis.qualityColumns(col("text"))
-      Tables.parquet(s, s"$dir/documents.parquet").select(
+      t(s, dir, "documents").select(
         col("doc_id") +: cols.map { case (n, c) => c.as(n) }: _*)
     }),
 
     "bpe_token_stats" -> ((s, dir) => {
-      Tables.parquet(s, s"$dir/documents.parquet").select(col("doc_id"),
+      t(s, dir, "documents").select(col("doc_id"),
         TextAnalysis.bpeTokenCount(col("text")).as("bpe_tokens"),
         TextAnalysis.tokenCount(col("text")).as("ws_tokens"))
     }),
@@ -62,7 +62,7 @@ object PipelineQueries {
     // explode, no shuffle — and DuckDB recomputes them with list slices
     "chunk_docs" -> ((s, dir) => {
       TextAnalysis.chunkByTokens(
-        Tables.parquet(s, s"$dir/documents.parquet").select(col("doc_id"), col("text")),
+        t(s, dir, "documents").select(col("doc_id"), col("text")),
         "doc_id", "text", chunkTokens = 24, overlap = 8)
     }),
 
@@ -71,7 +71,7 @@ object PipelineQueries {
     // numerator of H = log2 n − Σ c·log2 c / n — floor-log2 via binary
     // string length, so both engines replay it without ln() ulps
     "token_entropy" -> ((s, dir) => {
-      val toks = Tables.parquet(s, s"$dir/documents.parquet").select(col("doc_id"),
+      val toks = t(s, dir, "documents").select(col("doc_id"),
           explode(split(trim(col("text")), "\\s+")).as("tok"))
         .where(col("tok") =!= "")
       toks.groupBy(col("doc_id"), col("tok")).agg(count(lit(1)).as("c"))
@@ -87,7 +87,7 @@ object PipelineQueries {
     "lang_quality_pivot" -> ((s, dir) => {
       val cols = TextAnalysis.qualityColumns(col("text"))
       val ok = cols.find(_._1 == "quality_ok").get._2
-      Tables.parquet(s, s"$dir/documents.parquet")
+      t(s, dir, "documents")
         .select(col("lang"), ok.as("q"))
         .groupBy(col("lang")).pivot("q", Seq(0, 1))
         .agg(count(lit(1)))
@@ -101,7 +101,7 @@ object PipelineQueries {
     // assignment, one small rollup
     "equi_depth_histogram" -> ((s, dir) =>
       Sketches.equiDepthHistogram(
-        Tables.parquet(s, s"$dir/documents.parquet")
+        t(s, dir, "documents")
           .select(TextAnalysis.tokenCount(col("text")).as("toks")),
         col("toks"), buckets = 8)),
 
@@ -110,7 +110,7 @@ object PipelineQueries {
     // source's top quartile" becomes comparable before mixing
     "quantile_norm_buckets" -> ((s, dir) =>
       Sampling.quantileNormalizeByGroup(
-        Tables.parquet(s, s"$dir/documents.parquet").select(col("doc_id"), col("lang"),
+        t(s, dir, "documents").select(col("doc_id"), col("lang"),
           TextAnalysis.tokenCount(col("text")).cast("long").as("toks")),
         col("lang"), col("toks"), buckets = 4)
         .select(col("doc_id"), col("lang"), col("bucket"))),
@@ -120,7 +120,7 @@ object PipelineQueries {
     // arithmetic both engines replay
     "doc_length_histogram" -> ((s, dir) => {
       val toks = TextAnalysis.tokenCount(col("text")).cast("long")
-      Tables.parquet(s, s"$dir/documents.parquet").select(toks.as("toks"))
+      t(s, dir, "documents").select(toks.as("toks"))
         .select(floor(col("toks") / lit(32)).cast("long").as("bin"), col("toks"))
         .groupBy(col("bin"))
         .agg(count(lit(1)).as("n"), min(col("toks")).as("min_toks"),
@@ -128,7 +128,7 @@ object PipelineQueries {
     }),
 
     "fingerprint_md5" -> ((s, dir) => {
-      Tables.parquet(s, s"$dir/documents.parquet").select(col("doc_id"),
+      t(s, dir, "documents").select(col("doc_id"),
         md5(col("text").cast("binary")).as("fp"))
     }),
 
@@ -136,7 +136,7 @@ object PipelineQueries {
     // oracle: DuckDB recomputes the same mod-2^64 rolling hash + mix64
     // via 32-bit-split HUGEINT arithmetic (see fingerprintOracle below)
     "doc_fingerprint64" -> ((s, dir) => {
-      Tables.parquet(s, s"$dir/documents.parquet").select(col("doc_id"),
+      t(s, dir, "documents").select(col("doc_id"),
         Tx.doc_fingerprint(col("text")).as("fp64"))
     }),
 
@@ -146,7 +146,7 @@ object PipelineQueries {
     // sf0.01) is 1 - (1-0.875^4)^16 ≈ 1 - 7e-7, and signatures are
     // seeded/deterministic — verified green against the exact oracle
     "minhash_dup_pairs" -> ((s, dir) => {
-      Dedup.minhashDupPairs(Tables.parquet(s, s"$dir/documents.parquet").select(col("doc_id"), col("text")),
+      Dedup.minhashDupPairs(t(s, dir, "documents").select(col("doc_id"), col("text")),
         "doc_id", "text", shingle = 5, numHashes = 64, bands = 16, threshold = 0.8)
     }),
 
@@ -155,7 +155,7 @@ object PipelineQueries {
     // appended near-copies of corpus docs (jaccard ~0.99) — the copies
     // must vanish even though exact hashing would keep them
     "near_dedup_incremental" -> ((s, dir) => {
-      val d = Tables.parquet(s, s"$dir/documents.parquet").select(col("doc_id"), col("text"))
+      val d = t(s, dir, "documents").select(col("doc_id"), col("text"))
       val corpus = d.where(col("doc_id") % 3 === 0)
       val batch = d.where(col("doc_id") % 3 =!= 0)
         .unionAll(corpus.select((col("doc_id") + 200000).as("doc_id"),
@@ -171,7 +171,7 @@ object PipelineQueries {
     // prefix filter is lossless, not probabilistic. The two operators
     // passing against ONE oracle is itself the recall-1.0 proof.
     "jaccard_dup_pairs" -> ((s, dir) => {
-      Dedup.jaccardDupPairs(Tables.parquet(s, s"$dir/documents.parquet").select(col("doc_id"), col("text")),
+      Dedup.jaccardDupPairs(t(s, dir, "documents").select(col("doc_id"), col("text")),
         "doc_id", "text", shingle = 5, threshold = 0.8)
     }),
 
@@ -188,7 +188,7 @@ object PipelineQueries {
     // any shingle (lossless prefix lemma), so this is a fixture knob,
     // not a recall tradeoff.
     "cosine_dup_pairs" -> ((s, dir) => {
-      Dedup.cosineDupPairs(Tables.parquet(s, s"$dir/documents.parquet").select(col("doc_id"), col("text")),
+      Dedup.cosineDupPairs(t(s, dir, "documents").select(col("doc_id"), col("text")),
         "doc_id", "text", shingle = 5, threshold = 0.8)
     }),
 
@@ -200,7 +200,7 @@ object PipelineQueries {
     // miss them (the excerpt is ~40% of the original's grams). The
     // oracle recomputes ALL ordered pairs in DuckDB.
     "containment_dup_pairs" -> ((s, dir) => {
-      val d = Tables.parquet(s, s"$dir/documents.parquet").select(col("doc_id"), col("text"))
+      val d = t(s, dir, "documents").select(col("doc_id"), col("text"))
       val base = d.unionAll(d.where(col("doc_id") % 7 === 0)
         .select((col("doc_id") + 200000).as("doc_id"),
           substring(col("text"), lit(1),
@@ -221,7 +221,7 @@ object PipelineQueries {
     // COMPOSITION under one oracle: DuckDB recomputes plain
     // levenshtein pairs and closes them with a recursive CTE
     "record_linkage_clusters" -> ((s, dir) => {
-      val d = Tables.parquet(s, s"$dir/documents.parquet")
+      val d = t(s, dir, "documents")
         .select(col("doc_id"), substring(col("text"), lit(1), lit(24)).as("s"))
       val p = (col("doc_id") % 20).cast("int") + lit(3)
       val base = d.unionAll(d.where(col("doc_id") % 9 === 0)
@@ -239,7 +239,7 @@ object PipelineQueries {
     }),
 
     "edit_distance_pairs" -> ((s, dir) => {
-      val d = Tables.parquet(s, s"$dir/documents.parquet")
+      val d = t(s, dir, "documents")
         .select(col("doc_id"), substring(col("text"), lit(1), lit(24)).as("s"))
       val p = (col("doc_id") % 20).cast("int") + lit(3)
       val base = d.unionAll(d.where(col("doc_id") % 9 === 0)
@@ -261,7 +261,7 @@ object PipelineQueries {
     // recursive CTE — transitive closure checked cross-engine.
     "dedup_clusters" -> ((s, dir) => {
       Dedup.dedupNearClusters(
-          Tables.parquet(s, s"$dir/documents.parquet").select(col("doc_id"), col("text")),
+          t(s, dir, "documents").select(col("doc_id"), col("text")),
           "doc_id", "text", shingle = 3, numHashes = 64, bands = 16,
           threshold = 0.8)
         .select(col("doc_id"))
@@ -274,7 +274,7 @@ object PipelineQueries {
     // recursive-CTE clusters by the same integer score.
     "dedup_clusters_best" -> ((s, dir) => {
       Dedup.dedupNearClustersKeepBest(
-          Tables.parquet(s, s"$dir/documents.parquet").select(col("doc_id"), col("text")),
+          t(s, dir, "documents").select(col("doc_id"), col("text")),
           "doc_id", "text",
           TextAnalysis.tokenCount(col("text")).cast("long"),
           shingle = 3, numHashes = 64, bands = 16, threshold = 0.8)
@@ -288,7 +288,7 @@ object PipelineQueries {
     // transitive closure exactly
     "dedup_clusters_star" -> ((s, dir) => {
       Dedup.dedupNearClusters(
-          Tables.parquet(s, s"$dir/documents.parquet").select(col("doc_id"), col("text")),
+          t(s, dir, "documents").select(col("doc_id"), col("text")),
           "doc_id", "text", shingle = 3, numHashes = 64, bands = 16,
           threshold = 0.8, ccAlgorithm = "star")
         .select(col("doc_id"))
@@ -362,7 +362,7 @@ object PipelineQueries {
     // simhash64 and ngram_jaccard invoked from PURE spark.sql TEXT
     "sql_pipeline_surface" -> ((s, dir) => {
       graft.pipeline.Tx.registerAll(s)
-      Tables.parquet(s, s"$dir/documents.parquet").createOrReplaceTempView("graft_docs_sql")
+      t(s, dir, "documents").createOrReplaceTempView("graft_docs_sql")
       s.sql("""SELECT doc_id, simhash64(text) AS simhash,
                       ngram_jaccard(text, text) AS self_jaccard
                FROM graft_docs_sql""")
@@ -373,7 +373,7 @@ object PipelineQueries {
     // and the 64 per-bit ±1 votes in HUGEINT arithmetic — every
     // fingerprint bit-for-bit, not just planted-pair behavior
     "simhash_fingerprints" -> ((s, dir) => {
-      Tables.parquet(s, s"$dir/documents.parquet").select(col("doc_id"),
+      t(s, dir, "documents").select(col("doc_id"),
         Tx.simhash64(col("text"), ngram = 3, seed = 42L).as("simhash"))
     }),
 
@@ -382,7 +382,7 @@ object PipelineQueries {
     // family h_j = mix64(g^seedA) + j*(mix64(g^seedB)|1) with SIGNED
     // min semantics, long-form (doc_id, j, sig) rows
     "minhash_signatures" -> ((s, dir) => {
-      Tables.parquet(s, s"$dir/documents.parquet")
+      t(s, dir, "documents")
         .select(col("doc_id"),
           posexplode(Tx.minhash_signature(col("text"), shingle = 3,
             numHashes = 16, seed = 42L)))
@@ -418,7 +418,7 @@ object PipelineQueries {
     // -- similarity search -------------------------------------------------
     // exact ranking parity via integer-quantized dot products
     "ann_quant_topk" -> ((s, dir) => {
-      val emb = Tables.parquet(s, s"$dir/embeddings.parquet")
+      val emb = t(s, dir, "embeddings")
       val corpus = emb.select(col("vec_id").as("c_id"), col("embedding").as("c_vec"))
       val queries = emb.where(col("vec_id") < 10)
         .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
@@ -435,7 +435,7 @@ object PipelineQueries {
     // different association: 1-ulp differences on self-pairs) orders and
     // hashes identically; ties at 1e-12 break on c_id in both engines.
     "ann_cosine_topk" -> ((s, dir) => {
-      val emb = Tables.parquet(s, s"$dir/embeddings.parquet")
+      val emb = t(s, dir, "embeddings")
       Similarity.bruteForceTopK(
         emb.select(col("vec_id").as("c_id"), col("embedding").as("c_vec")),
         emb.where(col("vec_id") < 10)
@@ -451,7 +451,7 @@ object PipelineQueries {
     // engine shuffles (id, band, bucket) keys; only the ORACLE goes
     // all-pairs on the sign grid.
     "ann_srp_topk" -> ((s, dir) => {
-      val emb = Tables.parquet(s, s"$dir/embeddings.parquet")
+      val emb = t(s, dir, "embeddings")
       Similarity.srpTopK(
         emb.select(col("vec_id").as("c_id"), col("embedding").as("c_vec")),
         emb.where(col("vec_id") < 10)
@@ -464,7 +464,7 @@ object PipelineQueries {
     // exhaustive, and band→dedup→refine→top-k must reproduce brute
     // force exactly (the nprobe=nlist trick, applied to SRP).
     "ann_srp_exact" -> ((s, dir) => {
-      val emb = Tables.parquet(s, s"$dir/embeddings.parquet")
+      val emb = t(s, dir, "embeddings")
       Similarity.srpTopK(
         emb.select(col("vec_id").as("c_id"), col("embedding").as("c_vec")),
         emb.where(col("vec_id") < 10)
@@ -480,7 +480,7 @@ object PipelineQueries {
     // then pure arithmetic. Recall vs brute force additionally
     // asserted in PipelineSpec.
     "ann_ivf_topk" -> ((s, dir) => {
-      val emb = Tables.parquet(s, s"$dir/embeddings.parquet")
+      val emb = t(s, dir, "embeddings")
       Similarity.ivfTopK(
         emb.select(col("vec_id").as("c_id"), col("embedding").as("c_vec")),
         emb.where(col("vec_id") < 10)
@@ -497,7 +497,7 @@ object PipelineQueries {
     // Same pattern as the sketch contract gates; per-config recall is
     // additionally spec-gated in PipelineSpec.
     "ann_pq_topk" -> ((s, dir) => {
-      val emb = Tables.parquet(s, s"$dir/embeddings.parquet")
+      val emb = t(s, dir, "embeddings")
       val corpus = emb.select(col("vec_id").as("c_id"),
         col("embedding").as("c_vec"))
       val queries = emb.where(col("vec_id") < 10)
@@ -528,7 +528,7 @@ object PipelineQueries {
     // result must hash-match the brute-force DuckDB oracle. The
     // approximate config stays rows-only + recall-gated (PipelineSpec).
     "ann_ivf_exact" -> ((s, dir) => {
-      val emb = Tables.parquet(s, s"$dir/embeddings.parquet")
+      val emb = t(s, dir, "embeddings")
       Similarity.ivfTopK(
         emb.select(col("vec_id").as("c_id"), col("embedding").as("c_vec")),
         emb.where(col("vec_id") < 10)
@@ -543,7 +543,7 @@ object PipelineQueries {
     // scoring and the refine joins all run, and the final ranking must
     // hash-match the same brute-force oracle.
     "ann_pq_exact" -> ((s, dir) => {
-      val emb = Tables.parquet(s, s"$dir/embeddings.parquet")
+      val emb = t(s, dir, "embeddings")
       Similarity.pqTopK(
         emb.select(col("vec_id").as("c_id"), col("embedding").as("c_vec")),
         emb.where(col("vec_id") < 10)
@@ -556,7 +556,7 @@ object PipelineQueries {
     // refine): each doc scored against the next doc id — a linear number
     // of pairs, so the differential DuckDB oracle stays cheap at any sf.
     "ngram_jaccard_adjacent" -> ((s, dir) => {
-      val docs = Tables.parquet(s, s"$dir/documents.parquet").select(col("doc_id"), col("text"))
+      val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
       val a = docs.select(col("doc_id").as("id_a"), col("text").as("__ta"))
       val b = docs.select((col("doc_id") - 1).as("id_a"), col("text").as("__tb"))
       a.join(b, "id_a")
@@ -570,7 +570,7 @@ object PipelineQueries {
     // the same result as one relational program (each stage stays a
     // keyed shuffle, so the chain runs at corpus scale unchanged).
     "pipeline_compose" -> ((s, dir) => {
-      val docs = Tables.parquet(s, s"$dir/documents.parquet").select(col("doc_id"), col("text"))
+      val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
       val ok = TextAnalysis.qualityColumns(col("text"))
         .find(_._1 == "quality_ok").get._2
       val good = docs.where(ok === 1)
@@ -583,7 +583,7 @@ object PipelineQueries {
     // -- deterministic sampling / mixing / decontamination -------------------
     // hash-threshold sampling: same survivors on any run/partitioning
     "det_sample" -> ((s, dir) => {
-      Sampling.deterministicSample(Tables.parquet(s, s"$dir/documents.parquet"),
+      Sampling.deterministicSample(t(s, dir, "documents"),
           col("doc_id"), 0.25, "s42")
         .select(col("doc_id"), col("lang"))
     }),
@@ -594,7 +594,7 @@ object PipelineQueries {
     // (row_number + flat 15-digit hex-to-int arithmetic), self-exclusion
     // falls back to the next rank
     "contrastive_negatives" -> ((s, dir) => {
-      val docs = Tables.parquet(s, s"$dir/documents.parquet")
+      val docs = t(s, dir, "documents")
       Sampling.hashNegatives(
         Sampling.deterministicSample(docs, col("doc_id"), 0.1, "an1"),
         "doc_id", docs, "doc_id", k = 2, numPartitions = 8, salt = "neg")
@@ -603,7 +603,7 @@ object PipelineQueries {
 
     // per-group rates = dataset mixture (upsample zh, downsample the rest)
     "mixture_sample" -> ((s, dir) => {
-      Sampling.deterministicSampleByGroup(Tables.parquet(s, s"$dir/documents.parquet"),
+      Sampling.deterministicSampleByGroup(t(s, dir, "documents"),
           col("doc_id"), col("lang"),
           Map("en" -> 0.5, "zh" -> 0.9, "fr" -> 0.25),
           default = 0.1, salt = "mix1")
@@ -612,7 +612,7 @@ object PipelineQueries {
 
     // k smallest hashes per language — deterministic stratified sample
     "stratified_sample" -> ((s, dir) => {
-      Sampling.stratifiedTopK(Tables.parquet(s, s"$dir/documents.parquet"),
+      Sampling.stratifiedTopK(t(s, dir, "documents"),
           col("lang"), col("doc_id"), k = 30, salt = "st7")
         .select(col("doc_id"), col("lang"))
     }),
@@ -620,7 +620,7 @@ object PipelineQueries {
     // deterministic global training-order shuffle; the rank is the
     // distributed two-pass Ranks path, not a single-task window
     "shuffle_rank" -> ((s, dir) => {
-      Sampling.shuffleRank(Tables.parquet(s, s"$dir/documents.parquet").select(col("doc_id")),
+      Sampling.shuffleRank(t(s, dir, "documents").select(col("doc_id")),
         col("doc_id"), "pos", numPartitions = 8, salt = "sh1")
     }),
 
@@ -628,7 +628,7 @@ object PipelineQueries {
     // 8-token gram with the held-out slice (doc_id % 10 = 0), with its
     // matched-gram count; 0 rows of overlap => doc survives byNgramOverlap
     "decontaminate" -> ((s, dir) => {
-      val docs = Tables.parquet(s, s"$dir/documents.parquet").select(col("doc_id"), col("text"))
+      val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
       val eval = docs.where(col("doc_id") % 10 === 0)
       Decontaminate.contaminatedIds(docs, eval, "doc_id", "text", n = 8)
     }),
@@ -638,7 +638,7 @@ object PipelineQueries {
     // (no single-task window); the oracle is the single-window running
     // sum — the two formulations must agree exactly
     "pack_token_shards" -> ((s, dir) => {
-      val docs = Tables.parquet(s, s"$dir/documents.parquet")
+      val docs = t(s, dir, "documents")
         .withColumn("toks", TextAnalysis.tokenCount(col("text")))
       Sampling.packByTokenBudget(docs, col("doc_id"), col("toks"),
           budget = 5000, outCol = "shard", numPartitions = 8, salt = "pk")
@@ -651,7 +651,7 @@ object PipelineQueries {
     // single-task window). Three operators, one oracle; shard sizes are
     // budget-exact by construction
     "training_shard_pipeline" -> ((s, dir) => {
-      val docs = Tables.parquet(s, s"$dir/documents.parquet").select(col("doc_id"), col("text"))
+      val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
         .withColumn("__toks", TextAnalysis.tokenCount(col("text")))
         .where(col("__toks") >= 30)
       val chunks = TextAnalysis.chunkByTokens(
@@ -673,7 +673,7 @@ object PipelineQueries {
     // Gopher/C4-style repetition features per document
     "repetition_stats" -> ((s, dir) => {
       val cols = TextAnalysis.repetitionColumns(col("text"))
-      Tables.parquet(s, s"$dir/documents.parquet").select(
+      t(s, dir, "documents").select(
         col("doc_id") +: cols.map { case (nm, c) => c.as(nm) }: _*)
     }),
 
@@ -681,7 +681,7 @@ object PipelineQueries {
     // `decontaminate` (no false negatives; false positives die in the
     // exact join) — pinned to the SAME oracle SQL
     "decontaminate_bloom" -> ((s, dir) => {
-      val docs = Tables.parquet(s, s"$dir/documents.parquet").select(col("doc_id"), col("text"))
+      val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
       val eval = docs.where(col("doc_id") % 10 === 0)
       Decontaminate.contaminatedIdsBloom(docs, eval, "doc_id", "text", n = 8)
     }),
@@ -690,7 +690,7 @@ object PipelineQueries {
     // min(1, 8/sqrt(|lang|)) — rates computed in-plan from the group
     // counts; small languages (fr: 8/sqrt(64)=1) are kept in full
     "temperature_mixture" -> ((s, dir) => {
-      Sampling.temperatureMixture(Tables.parquet(s, s"$dir/documents.parquet"),
+      Sampling.temperatureMixture(t(s, dir, "documents"),
           col("lang"), col("doc_id"), coeff = 8.0, salt = "tm1")
         .groupBy(col("lang")).agg(count(lit(1)).as("n"))
     }),
@@ -700,7 +700,7 @@ object PipelineQueries {
     // proportionally favored; DuckDB replays the identical arithmetic
     "weighted_sample" -> ((s, dir) => {
       Sampling.weightedDeterministicSample(
-          Tables.parquet(s, s"$dir/documents.parquet").select(col("doc_id"), col("text")),
+          t(s, dir, "documents").select(col("doc_id"), col("text")),
           col("doc_id"), TextAnalysis.tokenCount(col("text")),
           expectedFraction = 0.3, salt = "ws1")
         .select(col("doc_id"))
@@ -710,7 +710,7 @@ object PipelineQueries {
     // frozen-test-set property: a row's band depends only on earlier
     // fractions) — labels hash-compared row by row
     "split_by_hash" -> ((s, dir) => {
-      Sampling.splitByHash(Tables.parquet(s, s"$dir/documents.parquet").select(col("doc_id")),
+      Sampling.splitByHash(t(s, dir, "documents").select(col("doc_id")),
           col("doc_id"), Seq("train" -> 0.7, "val" -> 0.2, "test" -> 0.1),
           salt = "sp1")
         .select(col("doc_id"), col("split"))
@@ -730,7 +730,7 @@ object PipelineQueries {
           lpad((id % 10000).cast("string"), 4, "0"))).otherwise(lit("")),
         when(id % 5 === 0, concat(lit(" ip 10."), (id % 256).cast("string"),
           lit(".0."), (id % 100).cast("string"))).otherwise(lit("")))
-      val withPii = Tables.parquet(s, s"$dir/documents.parquet").select(id, planted.as("ptext"))
+      val withPii = t(s, dir, "documents").select(id, planted.as("ptext"))
       val counts = Scrub.piiCounts(col("ptext"))
       withPii.select(
         col("doc_id") +: counts.map { case (nm, c) => c.as(nm) } :+
@@ -777,7 +777,7 @@ object PipelineQueries {
           lit(".example.com/page"))).otherwise(lit("")),
         when(id % 4 === 1, concat(lit(" via https://m"), (id % 3).cast("string"),
           lit(".mirror.org/x"))).otherwise(lit("")))
-      val docs = Tables.parquet(s, s"$dir/documents.parquet").select(id, planted.as("ptext"))
+      val docs = t(s, dir, "documents").select(id, planted.as("ptext"))
       import s.implicits._
       val blocklist = Seq("site0.example.com", "site3.example.com", "m1.mirror.org")
         .toDF("host")
@@ -808,7 +808,7 @@ object PipelineQueries {
           .otherwise(concat(lit("?utm_source=news&z="), (id % 4).cast("string"),
             lit("&a=1"))),
         lit("#sec"), (id % 9).cast("string"))
-      Tables.parquet(s, s"$dir/documents.parquet")
+      t(s, dir, "documents")
         .select(id, Scrub.canonicalizeUrl(url).as("canon"))
         .groupBy(col("canon"))
         .agg(count(lit(1)).as("n"), min(id).as("keep_id"))
@@ -823,9 +823,9 @@ object PipelineQueries {
     // the join level is the checked property, next to the aggregate-
     // level salting of salted_domain_counts
     "salted_join_counts" -> ((s, dir) => {
-      val ev = Tables.parquet(s, s"$dir/events.parquet")
+      val ev = t(s, dir, "events")
         .select(col("user_id"), col("event_id"), col("event_type"))
-      val dim = Tables.parquet(s, s"$dir/events.parquet").select(col("user_id")).distinct()
+      val dim = t(s, dir, "events").select(col("user_id")).distinct()
         .select(col("user_id"), (col("user_id") % 7).as("cohort"))
       graft.tools.Salted.saltedJoin(ev, dim, "user_id",
           saltFromCol = "event_id", salts = 8)
@@ -838,7 +838,7 @@ object PipelineQueries {
     // in quantized exact integers — one narrow products projection, one
     // vector_sum aggregate, corpus never shuffles
     "embedding_covariance" -> ((s, dir) =>
-      Sketches.vectorCovarianceStats(Tables.parquet(s, s"$dir/embeddings.parquet"), "embedding",
+      Sketches.vectorCovarianceStats(t(s, dir, "embeddings"), "embedding",
         dim = 64)),
 
     "salted_domain_counts" -> ((s, dir) => {
@@ -848,7 +848,7 @@ object PipelineQueries {
           lit(".example.com/page"))).otherwise(lit("")),
         when(id % 4 === 1, concat(lit(" via https://m"), (id % 3).cast("string"),
           lit(".mirror.org/x"))).otherwise(lit("")))
-      val docs = Tables.parquet(s, s"$dir/documents.parquet").select(id, planted.as("ptext"))
+      val docs = t(s, dir, "documents").select(id, planted.as("ptext"))
       import s.implicits._
       val blocklist = Seq("site0.example.com", "site3.example.com", "m1.mirror.org")
         .toDF("host")
@@ -864,7 +864,7 @@ object PipelineQueries {
     // padding-waste packer. Window keys on (bucket, shard), never the
     // bare bucket (a hot length band must not sort on one task).
     "length_bucket_batches" -> ((s, dir) => {
-      val d = Tables.parquet(s, s"$dir/documents.parquet").select(col("doc_id"),
+      val d = t(s, dir, "documents").select(col("doc_id"),
         TextAnalysis.tokenCount(col("text")).as("ntok"))
       Sampling.lengthBucketBatches(d, "doc_id", "ntok",
           bucketWidth = 32, batchSize = 8, shards = 16)
@@ -877,14 +877,14 @@ object PipelineQueries {
     // one filter + one user-keyed join + one min aggregate — no windows,
     // no per-user event collection.
     "funnel_stages" -> ((s, dir) =>
-      Funnels.funnelCounts(Tables.parquet(s, s"$dir/events.parquet"), "user_id", "ts", "event_type",
+      Funnels.funnelCounts(t(s, dir, "events"), "user_id", "ts", "event_type",
         Seq("signup", "click", "purchase"))),
 
     // the funnel with a 1-hour ATTRIBUTION WINDOW per stage ("purchased
     // within an hour of clicking"): int64-nanos gap arithmetic, the
     // oracle replays it as timestamp INTERVAL bounds
     "funnel_within_1h" -> ((s, dir) =>
-      Funnels.funnelCountsWithin(EventTs.toNanos(Tables.parquet(s, s"$dir/events.parquet")),
+      Funnels.funnelCountsWithin(EventTs.toNanos(t(s, dir, "events")),
         "user_id", "ts", "event_type", Seq("signup", "click", "purchase"),
         maxGap = lit(3600L * 1000000000L))),
 
@@ -894,13 +894,13 @@ object PipelineQueries {
     // nanos); (user, day) distinct once, min-day reuses it, one final
     // (cohort, offset) aggregate.
     "retention_cohorts" -> ((s, dir) =>
-      Funnels.retentionCohorts(EventTs.toNanos(Tables.parquet(s, s"$dir/events.parquet")),
+      Funnels.retentionCohorts(EventTs.toNanos(t(s, dir, "events")),
         "user_id", Funnels.epochDayFromNanos(col("ts")))),
 
     // JSON property extraction (metadata columns ship as JSON blobs):
     // get_json_object pulls $.k per event, integer aggregates per type
     "props_json_stats" -> ((s, dir) =>
-      Tables.parquet(s, s"$dir/events.parquet")
+      t(s, dir, "events")
         .select(col("event_type"),
           get_json_object(col("props"), "$.k").cast("long").as("k"))
         .groupBy(col("event_type"))
@@ -917,7 +917,7 @@ object PipelineQueries {
     // learned rules must agree bit-for-bit including tie order.
     "bpe_train_merges" -> ((s, dir) => {
       TextAnalysis.bpeTrain(
-        Tables.parquet(s, s"$dir/documents.parquet").select(col("text")), "text", merges = 8)
+        t(s, dir, "documents").select(col("text")), "text", merges = 8)
     }),
 
     // BPE ENCODE with the same learned rules: per-doc word + symbol
@@ -926,7 +926,7 @@ object PipelineQueries {
     // keyed join + per-doc aggregate — no per-occurrence merge work.
     "bpe_encode_counts" -> ((s, dir) => {
       TextAnalysis.bpeEncodeCounts(
-        Tables.parquet(s, s"$dir/documents.parquet").select(col("doc_id"), col("text")),
+        t(s, dir, "documents").select(col("doc_id"), col("text")),
         "doc_id", "text", merges = 8)
     }),
 
@@ -936,7 +936,7 @@ object PipelineQueries {
     // both engines replay — full hash parity including tie order.
     "collocations_top" -> ((s, dir) => {
       TextAnalysis.collocationTopK(
-        Tables.parquet(s, s"$dir/documents.parquet").select(col("text")), "text", k = 20)
+        t(s, dir, "documents").select(col("text")), "text", k = 20)
     }),
 
     // link-graph host authority (the crawl-quality weight): 5 rounds
@@ -946,7 +946,7 @@ object PipelineQueries {
     // CTEs) must match bit for bit — an ITERATIVE graph algorithm
     // under the full hash gate, like dedup_clusters before it.
     "pagerank_hosts" -> ((s, dir) => {
-      val edges = Tables.parquet(s, s"$dir/documents.parquet")
+      val edges = t(s, dir, "documents")
         .select(concat(lit("h"), (col("doc_id") % 11).cast("string")).as("src"),
           concat(lit("h"), (col("doc_id") % 7).cast("string")).as("dst"))
         .where(col("src") =!= col("dst")).distinct()
@@ -960,7 +960,7 @@ object PipelineQueries {
     // pagerank_hosts with a seed-gated base term.
     "ppr_hosts" -> ((s, dir) => {
       import s.implicits._
-      val edges = Tables.parquet(s, s"$dir/documents.parquet")
+      val edges = t(s, dir, "documents")
         .select(concat(lit("h"), (col("doc_id") % 11).cast("string")).as("src"),
           concat(lit("h"), (col("doc_id") % 7).cast("string")).as("dst"))
         .where(col("src") =!= col("dst")).distinct()
@@ -974,7 +974,7 @@ object PipelineQueries {
     // a different per-round shape than PageRank (two half-steps + two
     // 1-row max broadcasts)
     "hits_hosts" -> ((s, dir) => {
-      val edges = Tables.parquet(s, s"$dir/documents.parquet")
+      val edges = t(s, dir, "documents")
         .select(concat(lit("h"), (col("doc_id") % 11).cast("string")).as("src"),
           concat(lit("h"), (col("doc_id") % 7).cast("string")).as("dst"))
         .where(col("src") =!= col("dst")).distinct()
@@ -989,7 +989,7 @@ object PipelineQueries {
     "embedding_centroids" -> ((s, dir) => {
       val q = transform(col("embedding"),
         x => round(x.cast("double") * 1000))
-      Tables.parquet(s, s"$dir/embeddings.parquet")
+      t(s, dir, "embeddings")
         .select((col("vec_id") % 8).as("grp"), q.as("__q"))
         .groupBy(col("grp"))
         .agg(Tx.vector_sum(col("__q")).as("__sums"), count(lit(1)).as("n"))
@@ -1004,7 +1004,7 @@ object PipelineQueries {
     // canonically (x<y<z) over the symmetric closure — two different
     // once-only strategies agreeing is the double-count/miss proof
     "triangle_counts" -> ((s, dir) => {
-      val edges = Tables.parquet(s, s"$dir/documents.parquet")
+      val edges = t(s, dir, "documents")
         .select(concat(lit("h"), (col("doc_id") % 11).cast("string")).as("src"),
           concat(lit("h"), (col("doc_id") % 7).cast("string")).as("dst"))
         .where(col("src") =!= col("dst")).distinct()
@@ -1018,7 +1018,7 @@ object PipelineQueries {
     // induced degrees. The oracle replays the identical peel as a
     // recursive CTE with window-function degrees.
     "kcore_hosts" -> ((s, dir) => {
-      val d = Tables.parquet(s, s"$dir/documents.parquet")
+      val d = t(s, dir, "documents")
       val nucleus = d.select(
         concat(lit("n"), (col("doc_id") % 7).cast("string")).as("src"),
         concat(lit("n"), (col("doc_id") % 5).cast("string")).as("dst"))
@@ -1038,7 +1038,7 @@ object PipelineQueries {
     // recursive CTE and must agree on every (node, min-hop) row.
     "bfs_hops" -> ((s, dir) => {
       import s.implicits._
-      val d = Tables.parquet(s, s"$dir/documents.parquet")
+      val d = t(s, dir, "documents")
       val ring = d.select(
         concat(lit("v"), (col("doc_id") % 64).cast("string")).as("src"),
         concat(lit("v"), ((col("doc_id") + 1) % 64).cast("string")).as("dst"))
@@ -1058,7 +1058,7 @@ object PipelineQueries {
     // recursive CTE with min-cost per node.
     "cheapest_path_hops" -> ((s, dir) => {
       import s.implicits._
-      val d = Tables.parquet(s, s"$dir/documents.parquet")
+      val d = t(s, dir, "documents")
       def mkEdges(dstRes: org.apache.spark.sql.Column) = d.select(
         (col("doc_id") % 64).as("sr"), dstRes.as("dr"))
       val edges = mkEdges((col("doc_id") + 1) % 64)
@@ -1076,7 +1076,7 @@ object PipelineQueries {
     // normalization-canonical exact dedup: planted variants differing
     // only in case/punctuation/whitespace collapse onto their originals
     "normalize_dedup" -> ((s, dir) => {
-      val d = Tables.parquet(s, s"$dir/documents.parquet").select(col("doc_id"), col("text"))
+      val d = t(s, dir, "documents").select(col("doc_id"), col("text"))
       val base = d.unionAll(d.where(col("doc_id") % 10 === 0)
         .select((col("doc_id") + 100000).as("doc_id"),
           concat(upper(col("text")), lit(" !!")).as("text")))
@@ -1104,7 +1104,7 @@ object PipelineQueries {
     // emails to the same <EMAIL> tag and normalization kills the rest,
     // so every copy collapses onto its original (PII-invariant dedup)
     "scrub_pipeline" -> ((s, dir) => {
-      val d = Tables.parquet(s, s"$dir/documents.parquet").select(col("doc_id"), col("text"), col("lang"))
+      val d = t(s, dir, "documents").select(col("doc_id"), col("text"), col("lang"))
       val withPii = d.select(col("doc_id"),
         concat(col("text"), lit(" contact u"), (col("doc_id") % 25).cast("string"),
           lit("@example.com")).as("ptext"), col("lang"))
@@ -1124,7 +1124,7 @@ object PipelineQueries {
     // token count desc, id asc) — per duplicate group the highest-token
     // original survives, not the lowest id
     "dedup_keep_best" -> ((s, dir) => {
-      val d = Tables.parquet(s, s"$dir/documents.parquet").select(col("doc_id"), col("text"))
+      val d = t(s, dir, "documents").select(col("doc_id"), col("text"))
       val base = d.unionAll(d.where(col("doc_id") % 10 === 0)
         .select((col("doc_id") + 100000).as("doc_id"),
           concat(col("text"), lit(" extra trailing tokens")).as("text")))
@@ -1142,7 +1142,7 @@ object PipelineQueries {
     "quantile_filter" -> ((s, dir) => {
       val toks = size(regexp_extract_all(col("text"), lit("\\S+"), lit(0)))
       Sampling.topFractionByGroup(
-          Tables.parquet(s, s"$dir/documents.parquet").select(col("doc_id"), col("lang"),
+          t(s, dir, "documents").select(col("doc_id"), col("lang"),
             toks.as("toks")),
           col("lang"), 0.3, Seq(col("toks").desc, col("doc_id")))
         .select(col("doc_id"), col("lang"), col("toks"))
@@ -1154,7 +1154,7 @@ object PipelineQueries {
     // ONLY candidates, and the result is certified exact (kth count >
     // N/capacity). The oracle is the plain exact GROUP BY + LIMIT.
     "top_tokens" -> ((s, dir) => {
-      val toks = Tables.parquet(s, s"$dir/documents.parquet")
+      val toks = t(s, dir, "documents")
         .select(explode(regexp_extract_all(col("text"), lit("\\S+"), lit(0)))
           .as("tok"))
       Sketches.exactTopK(toks, col("tok"), k = 20, capacity = 256)
@@ -1168,7 +1168,7 @@ object PipelineQueries {
     // a PLANTED UNSEEN token (true_n = 0): it exercises the left-join
     // contract that empty cells count as 0 for keys never inserted.
     "cms_token_estimates" -> ((s, dir) => {
-      val docs = Tables.parquet(s, s"$dir/documents.parquet")
+      val docs = t(s, dir, "documents")
       val occurrences = docs.select(
         explode(Tx.token_ngram_hashes(col("text"), 1, 42L)).as("k"))
       val cells = Sketches.cmsCells(occurrences, col("k"),
@@ -1197,7 +1197,7 @@ object PipelineQueries {
           .otherwise(lit("")),
         when(id % 4 === 1, concat(lit(" via https://m"),
           (id % 3).cast("string"), lit(".mirror.org/x"))).otherwise(lit("")))
-      val docs = Tables.parquet(s, s"$dir/documents.parquet").select(id, planted.as("ptext"))
+      val docs = t(s, dir, "documents").select(id, planted.as("ptext"))
       Sketches.giniConcentrationPpm(
         Scrub.explodeHosts(docs, "doc_id", "ptext"), col("host"))
     }),
@@ -1207,7 +1207,7 @@ object PipelineQueries {
     // integer arithmetic
     "split_token_drift" -> ((s, dir) => {
       val split = Sampling.splitByHash(
-        Tables.parquet(s, s"$dir/documents.parquet").select(col("doc_id"), col("text")),
+        t(s, dir, "documents").select(col("doc_id"), col("text")),
         col("doc_id"), Seq("train" -> 0.7, "val" -> 0.2, "test" -> 0.1),
         salt = "sp1")
       val toks = split.select(col("split"),
@@ -1218,7 +1218,7 @@ object PipelineQueries {
     // frequency-ordered label dictionary (deterministic StringIndexer):
     // dense 0-based codes by count desc, label asc
     "label_index" -> ((s, dir) => {
-      TextAnalysis.labelIndex(Tables.parquet(s, s"$dir/documents.parquet"), col("lang"))
+      TextAnalysis.labelIndex(t(s, dir, "documents"), col("lang"))
     }),
 
     // leak-proof GROUP-keyed split: hashing the source (not the doc)
@@ -1228,7 +1228,7 @@ object PipelineQueries {
     // counts prove the ~80/20 mass
     "group_split_leakproof" -> ((s, dir) => {
       Sampling.splitByHash(
-          Tables.parquet(s, s"$dir/documents.parquet").select(col("doc_id"), col("source")),
+          t(s, dir, "documents").select(col("doc_id"), col("source")),
           col("source"), Seq("train" -> 0.8, "test" -> 0.2), salt = "gs1")
         .groupBy(col("split"))
         .agg(countDistinct(col("source")).as("n_sources"),
@@ -1239,7 +1239,7 @@ object PipelineQueries {
     // staging: every Σ including the cubes is an exact BIGINT — a
     // double Σv³ would be order-dependent across engines/partitionings)
     "moment_stats" -> ((s, dir) => {
-      Sketches.quantizedMomentsByGroup(Tables.parquet(s, s"$dir/events.parquet"),
+      Sketches.quantizedMomentsByGroup(t(s, dir, "events"),
         col("event_type"), col("value"), scale = 10.0)
     }),
 
@@ -1247,7 +1247,7 @@ object PipelineQueries {
     // integer-valued both engines, ties on the term string
     "tfidf_top_terms" -> ((s, dir) => {
       TextAnalysis.tfidfTopTerms(
-        Tables.parquet(s, s"$dir/documents.parquet").select(col("doc_id"), col("text")),
+        t(s, dir, "documents").select(col("doc_id"), col("text")),
         "doc_id", "text", top = 3)
     }),
 
@@ -1263,9 +1263,9 @@ object PipelineQueries {
     // exact side is the CHECK, not the scale path — at 100 TB you run
     // only the sketch.
     "sketch_distinct" -> ((s, dir) => {
-      val est = Sketches.approxDistinctByGroup(Tables.parquet(s, s"$dir/events.parquet"),
+      val est = Sketches.approxDistinctByGroup(t(s, dir, "events"),
         col("event_type"), col("user_id"))
-      val exact = Tables.parquet(s, s"$dir/events.parquet").groupBy(col("event_type").as("grp"))
+      val exact = t(s, dir, "events").groupBy(col("event_type").as("grp"))
         .agg(count_distinct(col("user_id")).as("n_exact"))
       est.join(exact, "grp")
         .select(col("grp"), col("n_exact"), col("n"),
@@ -1280,9 +1280,9 @@ object PipelineQueries {
     // slack for the boundary) — the oracle asserts both TRUE per
     // (group, prob). The estimate value stays engine-internal.
     "sketch_quantiles" -> ((s, dir) => {
-      val q = Sketches.approxQuantilesByGroupLong(Tables.parquet(s, s"$dir/events.parquet"),
+      val q = Sketches.approxQuantilesByGroupLong(t(s, dir, "events"),
         col("event_type"), col("value"), Seq(0.25, 0.5, 0.9))
-      val ev = Tables.parquet(s, s"$dir/events.parquet")
+      val ev = t(s, dir, "events")
         .select(col("event_type").as("grp"), col("value"))
       q.join(ev, "grp")
         .groupBy(col("grp"), col("prob"))
@@ -1309,7 +1309,7 @@ object PipelineQueries {
     // must hash-match DuckDB's quantile_disc. The production-accuracy
     // config stays rows-only (different sketches can't hash-match).
     "sketch_quantiles_exact" -> ((s, dir) => {
-      Sketches.approxQuantilesByGroupLong(Tables.parquet(s, s"$dir/events.parquet"),
+      Sketches.approxQuantilesByGroupLong(t(s, dir, "events"),
         col("event_type"), col("value"), Seq(0.25, 0.5, 0.9),
         acc = 1000000)
     }),
@@ -1325,7 +1325,7 @@ object PipelineQueries {
     // never shuffles the data (narrow local sorts + a P-row counts
     // broadcast) — the 100 TB profile pass exact quantiles can't give.
     "quantile_sketch_merge" -> ((s, dir) => {
-      val ev = Tables.parquet(s, s"$dir/events.parquet")
+      val ev = t(s, dir, "events")
         .where(col("value").isNotNull && col("event_id").isNotNull)
         .select(col("event_id"), col("value"))
       val a = Sketches.quantileSummary(
@@ -1355,7 +1355,7 @@ object PipelineQueries {
     // compression is one new sorted run whose bound composes by
     // ADDITION with the input's). Same exact-integer gate.
     "quantile_sketch_compress" -> ((s, dir) => {
-      val ev = Tables.parquet(s, s"$dir/events.parquet")
+      val ev = t(s, dir, "events")
         .where(col("value").isNotNull).select(col("value"))
       // pinned like the merge twin: sk feeds compressSummary AND its
       // own bound; comp feeds the quantile read twice
@@ -1385,7 +1385,7 @@ object PipelineQueries {
     // profile of a corpus card. Same exact-integer gate, checked per
     // (group, prob).
     "quantile_sketch_by_group" -> ((s, dir) => {
-      val ev = Tables.parquet(s, s"$dir/events.parquet")
+      val ev = t(s, dir, "events")
         .where(col("value").isNotNull && col("event_type").isNotNull)
         .select(col("event_type").as("g"), col("value"))
       val sk = Sketches.quantileSummaryByGroup(ev, "g", col("value"),
@@ -1412,7 +1412,7 @@ object PipelineQueries {
     // composed across every compression (carried + current, the
     // additive law compressSummary documents).
     "stream_quantile_sketch" -> ((s, dir) => {
-      val schema = Tables.parquet(s, s"$dir/events.parquet").schema
+      val schema = t(s, dir, "events").schema
       val src = EventTs.toTimestamp(s.readStream.schema(schema)
         .option("pathGlobFilter", "events.parquet").parquet(dir))
         .where(col("value").isNotNull).select(col("value"))
@@ -1453,7 +1453,7 @@ object PipelineQueries {
         .select((col("bound") + lit(carriedBound)).as("bound"))
       val qs = Sketches.quantilesFromSummary(summary,
         Seq(0.1, 0.5, 0.9), bound)
-      Tables.parquet(s, s"$dir/events.parquet").where(col("value").isNotNull)
+      t(s, dir, "events").where(col("value").isNotNull)
         .select(col("value")).crossJoin(broadcast(qs))
         .groupBy(col("prob"), col("n"), col("target"), col("bound"))
         .agg(sum(when(col("value") <= col("qv"), 1L).otherwise(0L))
@@ -1471,7 +1471,7 @@ object PipelineQueries {
     // distinct, and it is at least the largest single group's exact
     // distinct (roll-up monotonicity, with the same 5% slack).
     "sketch_union_distinct" -> ((s, dir) => {
-      val events = Tables.parquet(s, s"$dir/events.parquet")
+      val events = t(s, dir, "events")
       val est = Sketches.hllUnionEstimate(
         Sketches.hllSketchByGroup(events, col("event_type"), col("user_id")))
       val exact = events.agg(
@@ -1496,7 +1496,7 @@ object PipelineQueries {
     // against octet_length in DuckDB) and every stub output lands in
     // its documented range/set, asserted TRUE per row.
     "multimodal_features" -> ((s, dir) => {
-      val docs = Tables.parquet(s, s"$dir/documents.parquet")
+      val docs = t(s, dir, "documents")
         .select(col("doc_id"), col("text").cast("binary").as("content"))
       val meta = Multimodal.decodeStub(col("content"))
       val f0 = element_at(Multimodal.extractFeaturesStub(col("content"), 8), 1)
@@ -1516,7 +1516,7 @@ object PipelineQueries {
     // either axis and never collapses below 1 (floor of scale >= 512/
     // 1951 times width >= 32); byte length passes through per row.
     "multimodal_frames" -> ((s, dir) => {
-      val docs = Tables.parquet(s, s"$dir/documents.parquet")
+      val docs = t(s, dir, "documents")
         .select(col("doc_id"), col("text").cast("binary").as("content"))
       val small = Multimodal.resizeStub(Multimodal.decodeStub(col("content")), 512)
       val nFrames = size(Multimodal.frameSampleStub(col("content"), 4))
@@ -1538,7 +1538,7 @@ object PipelineQueries {
     // payload (equal contents never disagree on meta), and every meta
     // lands in the documented range/set.
     "multimodal_batch_decode" -> ((s, dir) => {
-      val docs = Tables.parquet(s, s"$dir/documents.parquet")
+      val docs = t(s, dir, "documents")
         .select(col("doc_id"), col("text").cast("binary").as("content"))
       val dec = Multimodal.mapDecodePartitions(docs, "content", batchSize = 128)
       dec.groupBy(col("content"))
@@ -1562,7 +1562,7 @@ object PipelineQueries {
     // recomputes independently — the codec itself (not a stub) is in
     // the checked path end-to-end.
     "multimodal_png_decode" -> ((s, dir) => {
-      val docs = Tables.parquet(s, s"$dir/documents.parquet").select(col("doc_id"))
+      val docs = t(s, dir, "documents").select(col("doc_id"))
       val withPng = Multimodal.syntheticPngs(docs, "doc_id", "content")
       Multimodal.mapDecodePartitions(withPng, "content", batchSize = 64)
         .select(col("doc_id"), col("meta.width").as("width"),
@@ -1575,7 +1575,7 @@ object PipelineQueries {
     // extraction (mean color/luminance) with a genuine lossless codec
     // in the loop
     "multimodal_pixel_stats" -> ((s, dir) => {
-      val docs = Tables.parquet(s, s"$dir/documents.parquet").select(col("doc_id"))
+      val docs = t(s, dir, "documents").select(col("doc_id"))
       val withPng = Multimodal.syntheticPngs(docs, "doc_id", "content")
       Multimodal.mapPixelStatsPartitions(withPng, "content", batchSize = 64)
         .select(col("doc_id"), col("pix.w").as("w"), col("pix.h").as("h"),
@@ -1590,7 +1590,7 @@ object PipelineQueries {
     // (frame_idx, width, height) rows must equal pure id arithmetic —
     // the 1->N video-sampling shape with a genuine codec in the loop.
     "multimodal_gif_frames" -> ((s, dir) => {
-      val docs = Tables.parquet(s, s"$dir/documents.parquet").select(col("doc_id"))
+      val docs = t(s, dir, "documents").select(col("doc_id"))
       val withGif = Multimodal.syntheticGifs(docs, "doc_id", "content")
       Multimodal.mapFrameSamplePartitions(withGif, "content", everyN = 2, batchSize = 64)
         .select(col("doc_id"), explode(col("frames")).as("f"))
@@ -1603,7 +1603,7 @@ object PipelineQueries {
     // through the hand-rolled RIFF parser (an independent
     // implementation), and the metadata must equal pure id arithmetic
     "multimodal_wav_decode" -> ((s, dir) => {
-      val docs = Tables.parquet(s, s"$dir/documents.parquet").select(col("doc_id"))
+      val docs = t(s, dir, "documents").select(col("doc_id"))
       val withWav = Multimodal.syntheticWavs(docs, "doc_id", "content")
       Multimodal.mapAudioDecodePartitions(withWav, "content", batchSize = 64)
         .select(col("doc_id"),
@@ -1620,7 +1620,7 @@ object PipelineQueries {
     // arithmetic — the resize stub retired by a genuine decode→resample
     // path
     "multimodal_resize_stats" -> ((s, dir) => {
-      val docs = Tables.parquet(s, s"$dir/documents.parquet").select(col("doc_id"))
+      val docs = t(s, dir, "documents").select(col("doc_id"))
       val withPng = Multimodal.syntheticPngs(docs, "doc_id", "content")
       Multimodal.mapResizeStatsPartitions(withPng, "content", maxSide = 4,
           batchSize = 64)
@@ -1635,7 +1635,7 @@ object PipelineQueries {
     // luminance grid → adjacent-pair bits, and every 64-bit hash must
     // equal DuckDB's replay of the same arithmetic
     "image_dhash" -> ((s, dir) => {
-      val docs = Tables.parquet(s, s"$dir/documents.parquet").select(col("doc_id"))
+      val docs = t(s, dir, "documents").select(col("doc_id"))
       val withPng = Multimodal.syntheticPngs(docs, "doc_id", "content")
       Multimodal.mapDHashPartitions(withPng, "content", batchSize = 64)
         .select(col("doc_id"), col("dhash"))
@@ -1646,7 +1646,7 @@ object PipelineQueries {
     // for the pHash DCT block, every coefficient DuckDB-replayed
     // through decode → floor map → luminance → ±1 transform
     "image_wht_embedding" -> ((s, dir) => {
-      val docs = Tables.parquet(s, s"$dir/documents.parquet").select(col("doc_id"))
+      val docs = t(s, dir, "documents").select(col("doc_id"))
       val withPng = Multimodal.syntheticPngs(docs, "doc_id", "content")
       Multimodal.mapImageWhtPartitions(withPng, "content", batchSize = 64)
         .select(col("doc_id"), posexplode(col("iwht")))
@@ -1660,7 +1660,7 @@ object PipelineQueries {
     // "embedding from image" path with a genuine featurizer, not the
     // hash stub
     "image_histogram_features" -> ((s, dir) => {
-      val docs = Tables.parquet(s, s"$dir/documents.parquet").select(col("doc_id"))
+      val docs = t(s, dir, "documents").select(col("doc_id"))
       val withPng = Multimodal.syntheticPngs(docs, "doc_id", "content")
       Multimodal.mapHistogramFeaturesPartitions(withPng, "content",
           bins = 4, batchSize = 64)
@@ -1678,7 +1678,7 @@ object PipelineQueries {
     // full-corpus pair set would be quadratic in cluster size; the
     // linear-at-scale operator over the whole corpus is image_dedup
     "image_dhash_pairs" -> ((s, dir) => {
-      val docs = Tables.parquet(s, s"$dir/documents.parquet").select(col("doc_id"))
+      val docs = t(s, dir, "documents").select(col("doc_id"))
         .where(col("doc_id") % 25 === 0)
       val withPng = Multimodal.syntheticPngs(docs, "doc_id", "content")
       val planted = withPng.unionAll(
@@ -1696,7 +1696,7 @@ object PipelineQueries {
     // single-shuffle exact-dedup plan keyed on the 8-byte hash) — the
     // linear-at-any-scale image dedup surface
     "image_dedup" -> ((s, dir) => {
-      val docs = Tables.parquet(s, s"$dir/documents.parquet").select(col("doc_id"))
+      val docs = t(s, dir, "documents").select(col("doc_id"))
       val withPng = Multimodal.syntheticPngs(docs, "doc_id", "content")
       val hashed = Multimodal.mapDHashPartitions(withPng, "content",
           batchSize = 64)
@@ -1710,7 +1710,7 @@ object PipelineQueries {
     // loudness/DC-offset audio feature step with a genuine codec pair
     // (independent writer vs hand-rolled parser) in the loop
     "multimodal_wav_samples" -> ((s, dir) => {
-      val docs = Tables.parquet(s, s"$dir/documents.parquet").select(col("doc_id"))
+      val docs = t(s, dir, "documents").select(col("doc_id"))
       val withWav = Multimodal.syntheticWavs(docs, "doc_id", "content")
       Multimodal.mapWavSampleStatsPartitions(withWav, "content", batchSize = 64)
         .select(col("doc_id"), col("pcm.rate").as("rate"),
@@ -1723,7 +1723,7 @@ object PipelineQueries {
     // the ±1-only transform keeps the features exact integers, so the
     // whole decode→transform chain is DuckDB-replayed per coefficient
     "multimodal_wav_wht" -> ((s, dir) => {
-      val docs = Tables.parquet(s, s"$dir/documents.parquet").select(col("doc_id"))
+      val docs = t(s, dir, "documents").select(col("doc_id"))
       val withWav = Multimodal.syntheticWavs(docs, "doc_id", "content")
       Multimodal.mapWavWhtPartitions(withWav, "content", batchSize = 64)
         .select(col("doc_id"), posexplode(col("wht")))
@@ -1742,7 +1742,7 @@ object PipelineQueries {
         when(id % 7 === 0, concat(lit("\n- item "), id.cast("string")))
           .otherwise(lit("")),
         when(id % 5 === 0, lit("\nmore soon...")).otherwise(lit("")))
-      val withLines = Tables.parquet(s, s"$dir/documents.parquet").select(id, ptext.as("ptext"))
+      val withLines = t(s, dir, "documents").select(id, ptext.as("ptext"))
       val cols = TextAnalysis.lineColumns(col("ptext"))
       withLines.select(
         col("doc_id") +: cols.map { case (n, c) => c.as(n) }: _*)
@@ -1753,7 +1753,7 @@ object PipelineQueries {
     // arithmetic (length(bin(cnt))-1) both engines compute exactly
     "lm_familiarity" -> ((s, dir) => {
       TextAnalysis.lmFamiliaritySelf(
-          Tables.parquet(s, s"$dir/documents.parquet").select(col("doc_id"), col("text")),
+          t(s, dir, "documents").select(col("doc_id"), col("text")),
           "doc_id", "text")
         .withColumnRenamed("id", "doc_id")
     }),
@@ -1766,7 +1766,7 @@ object PipelineQueries {
       // (the count is a cheap columnar scan). Non-release variant: same
       // convention as tfidf_top_terms (tf cache stays until clearCache;
       // the query stays lazy for Bench).
-      val docs = Tables.parquet(s, s"$dir/documents.parquet").select(col("doc_id"), col("text"))
+      val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
       val maxDf = (docs.count() * 8L) / 10L
       val idx = TextAnalysis.invertedIndex(docs, "doc_id", "text",
         minDf = 2L, maxDf = maxDf)
@@ -1781,7 +1781,7 @@ object PipelineQueries {
     // the first 3 tokens of every 100th doc; corpus tf shuffles once,
     // query side broadcasts, top-k runs as WindowGroupLimit.
     "bm25_topk" -> ((s, dir) => {
-      val docs = Tables.parquet(s, s"$dir/documents.parquet").select(col("doc_id"), col("text"))
+      val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
       val probes = docs.where(col("doc_id") % 100 === 7)
         .select(col("doc_id").as("query_id"),
           array_join(slice(regexp_extract_all(col("text"), lit("\\S+"),
@@ -1795,7 +1795,7 @@ object PipelineQueries {
     // relevant answer; MRR@10 staged as exact ppm integers. The oracle
     // replays the whole bm25 chain plus the metric roll-up.
     "bm25_mrr" -> ((s, dir) => {
-      val docs = Tables.parquet(s, s"$dir/documents.parquet").select(col("doc_id"), col("text"))
+      val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
       val probes = docs.where(col("doc_id") % 100 === 7)
         .select(col("doc_id").as("query_id"),
           array_join(slice(regexp_extract_all(col("text"), lit("\\S+"),
@@ -1813,7 +1813,7 @@ object PipelineQueries {
     // (computed once, shared with the oracle as literals) so the
     // metric is exact integer ppm, never a libm re-evaluation
     "bm25_ndcg" -> ((s, dir) => {
-      val docs = Tables.parquet(s, s"$dir/documents.parquet").select(col("doc_id"), col("text"))
+      val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
       val probes = docs.where(col("doc_id") % 100 === 7)
         .select(col("doc_id").as("query_id"),
           array_join(slice(regexp_extract_all(col("text"), lit("\\S+"),
@@ -1834,7 +1834,7 @@ object PipelineQueries {
     // minhash already gate) plus the window minima and the short-doc
     // degenerate case.
     "winnow_fingerprints" -> ((s, dir) => {
-      Dedup.winnowingFingerprints(Tables.parquet(s, s"$dir/documents.parquet"), "doc_id", "text",
+      Dedup.winnowingFingerprints(t(s, dir, "documents"), "doc_id", "text",
         ngram = 4, window = 4)
     }),
 
@@ -1843,7 +1843,7 @@ object PipelineQueries {
     // quantile machinery (median, then median deviation), quantized
     // integers end to end, 3×MAD flag counts per type
     "value_mad_outliers" -> ((s, dir) => {
-      val ev = Tables.parquet(s, s"$dir/events.parquet").select(col("event_type"),
+      val ev = t(s, dir, "events").select(col("event_type"),
         round(col("value") * 1000).cast("long").as("v"))
       // both quantile frames are |event_types| rows but lazily wrap a
       // full group-windowed pass — pin them so the pass runs once, not
@@ -1871,14 +1871,14 @@ object PipelineQueries {
     // quantiles, hottest-key ppm share — the pre-shuffle skew
     // diagnostic as a first-class operator, exact integers end to end.
     "key_skew_profile" -> ((s, dir) =>
-      Sketches.keySkewProfile(Tables.parquet(s, s"$dir/events.parquet"), col("user_id"))),
+      Sketches.keySkewProfile(t(s, dir, "events"), col("user_id"))),
 
     // Johnson-Lindenstrauss projection APPLY (dim reduction 64→8):
     // LCG-generated integer matrix as a literal, exact quantized dot
     // products, zero corpus exchanges — every output coordinate
     // replayed in DuckDB
     "embedding_projection" -> ((s, dir) =>
-      Similarity.projectVectors(Tables.parquet(s, s"$dir/embeddings.parquet"), "vec_id",
+      Similarity.projectVectors(t(s, dir, "embeddings"), "vec_id",
         "embedding", Similarity.lcgMatrix(64, 8))),
 
     // k-means ASSIGNMENT over embeddings against a deterministic
@@ -1886,7 +1886,7 @@ object PipelineQueries {
     // operator): quantized int64 distances, argmin folded per-row over
     // a collected centroid literal — zero shuffles on the corpus scan.
     "kmeans_assign" -> ((s, dir) => {
-      val embs = Tables.parquet(s, s"$dir/embeddings.parquet")
+      val embs = t(s, dir, "embeddings")
       val cents = embs.where(col("vec_id") % 97 === 3)
         .orderBy(col("vec_id")).limit(8)
       Retrieval.kmeansAssign(embs, "vec_id", "embedding",
@@ -1902,7 +1902,7 @@ object PipelineQueries {
     // choice, and ranking.
     "ivf_partitioned_probe" -> ((s, dir) => {
       val out = Queries.processTmpDir(s, "ivflake", dir)
-      val embs = Tables.parquet(s, s"$dir/embeddings.parquet")
+      val embs = t(s, dir, "embeddings")
       val cents = embs.where(col("vec_id") % 97 === 3)
         .orderBy(col("vec_id")).limit(8)
       Retrieval.kmeansAssign(embs, "vec_id", "embedding",
@@ -1943,7 +1943,7 @@ object PipelineQueries {
     // a narrow per-row sequence explode (no shuffle; the row blow-up IS
     // the epoch budget).
     "mixture_epochs" -> ((s, dir) => {
-      val docs = Tables.parquet(s, s"$dir/documents.parquet").select(col("doc_id"), col("source"))
+      val docs = t(s, dir, "documents").select(col("doc_id"), col("source"))
       val epochs = substring(col("source"), 4, 10).cast("int") % 3 + 1
       Sampling.epochMixture(docs, epochs)
         .select(col("doc_id"), col("source"), col("epoch").cast("long").as("epoch"))
@@ -1954,7 +1954,7 @@ object PipelineQueries {
     // per-label bucket IS the join key, so the corpus partitions by
     // label instead of a full cross join — then quantized-dot top-5.
     "ann_filtered_topk" -> ((s, dir) => {
-      val emb = Tables.parquet(s, s"$dir/embeddings.parquet")
+      val emb = t(s, dir, "embeddings")
       val corpus = emb.select(col("vec_id").as("c_id"),
         col("embedding").as("c_vec"), col("label").as("c_label"))
       val probes = emb.where(col("vec_id") < 10)
@@ -1973,7 +1973,7 @@ object PipelineQueries {
     // total / null / exact-distinct counts per column in one
     // aggregation pass (Expand-planned multi-distinct), long-form rows.
     "column_profile" -> ((s, dir) => {
-      val base = Tables.parquet(s, s"$dir/orders.parquet").select(col("o_custkey"),
+      val base = t(s, dir, "orders").select(col("o_custkey"),
         expr("nullif(o_orderstatus, 'F')").as("status"),
         col("o_orderpriority"))
       Sketches.columnProfile(base,
@@ -1985,7 +1985,7 @@ object PipelineQueries {
     // text revised — classify added/removed/changed/unchanged via one
     // full-outer join on (id, content-hash) projections.
     "snapshot_diff" -> ((s, dir) => {
-      val docs = Tables.parquet(s, s"$dir/documents.parquet").select(col("doc_id"), col("text"))
+      val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
       val oldSnap = docs.where(col("doc_id") % 5 =!= 4)
       val newSnap = docs.where(col("doc_id") % 5 =!= 3)
         .select(col("doc_id"),
@@ -2002,7 +2002,7 @@ object PipelineQueries {
     // into the documents snapshot. The engine's map-side struct-max
     // latest-row pick must equal the oracle's window-rank formulation.
     "cdc_apply_latest" -> ((s, dir) => {
-      val snap = Tables.parquet(s, s"$dir/documents.parquet").select(col("doc_id"), col("lang"),
+      val snap = t(s, dir, "documents").select(col("doc_id"), col("lang"),
         col("n_chars"))
       Retrieval.applyChangelog(snap, cdcChangelog(snap),
         "doc_id", "ts", "seq", "op")
@@ -2020,11 +2020,11 @@ object PipelineQueries {
     "stream_cdc_upsert" -> ((s, dir) => {
       val landing = Queries.processTmpDir(s, "cdc_landing", dir)
       // init: the snapshot itself as version (0, 0, 'I') rows
-      Tables.parquet(s, s"$dir/documents.parquet")
+      t(s, dir, "documents")
         .select(col("doc_id"), lit(0).as("ts"), lit(0).as("seq"),
           lit("I").as("op"), col("lang"), col("n_chars"))
         .write.parquet(landing)
-      val schema = Tables.parquet(s, s"$dir/documents.parquet").schema
+      val schema = t(s, dir, "documents").schema
       val chg = cdcChangelog(
         s.readStream.schema(schema)
           .option("pathGlobFilter", "documents.parquet").parquet(dir)
@@ -2064,7 +2064,7 @@ object PipelineQueries {
     // hash-compared against DuckDB replaying the same window-hash
     // arithmetic
     "cdc_chunks" -> ((s, dir) => {
-      val d = Tables.parquet(s, s"$dir/documents.parquet").select(col("doc_id"), col("text"))
+      val d = t(s, dir, "documents").select(col("doc_id"), col("text"))
       val corpus = d.unionAll(d.where(col("doc_id") % 10 === 0)
         .select((col("doc_id") + 100000).as("doc_id"),
           concat(lit("XYZ PREFIX "), col("text")).as("text")))
@@ -2079,7 +2079,7 @@ object PipelineQueries {
     // novel prefix — partial-copy stripping that paragraph dedup and
     // whole-doc dedup both miss
     "cdc_chunk_dedup" -> ((s, dir) => {
-      val d = Tables.parquet(s, s"$dir/documents.parquet").select(col("doc_id"), col("text"))
+      val d = t(s, dir, "documents").select(col("doc_id"), col("text"))
       val corpus = d.unionAll(d.where(col("doc_id") % 10 === 0)
         .select((col("doc_id") + 100000).as("doc_id"),
           concat(lit("XYZ PREFIX "), col("text")).as("text")))
@@ -2096,7 +2096,7 @@ object PipelineQueries {
         when(id % 3 === 0, concat(lit("\nunique tail "), id.cast("string")))
           .otherwise(lit("")),
         lit("\n"), col("text"))
-      val d = Tables.parquet(s, s"$dir/documents.parquet").select(id, ptext.as("ptext"))
+      val d = t(s, dir, "documents").select(id, ptext.as("ptext"))
       d.select(col("doc_id"),
         Scrub.dedupLinesInDoc(col("ptext")).as("text"))
     }),
@@ -2118,7 +2118,7 @@ object PipelineQueries {
             "&nbsp;end tricky &amp;lt;notag&amp;gt;</p>"))
           .otherwise(lit("")),
         lit("</body></html>"))
-      Tables.parquet(s, s"$dir/documents.parquet")
+      t(s, dir, "documents")
         .select(id, Scrub.stripHtml(page).as("text"))
     }),
 
@@ -2137,7 +2137,7 @@ object PipelineQueries {
           concat(lit("subscribe to "), col("source"), lit("\n")))
           .otherwise(lit("")),
         lit("ref "), id.cast("string"))
-      val d = Tables.parquet(s, s"$dir/documents.parquet")
+      val d = t(s, dir, "documents")
         .select(id, col("source"), ptext.as("text"))
       Scrub.removeBoilerplate(d, "doc_id", "text", "source", minDocs = 5L)
         .select(col("doc_id"), col("text"))
@@ -2152,7 +2152,7 @@ object PipelineQueries {
       // lazy localCheckpoint: norms feed the quantile's rank pass AND
       // the final filter — without the pin the 64-dim dot products run
       // twice over the corpus (two narrow longs per row pinned instead)
-      val norms = Tables.parquet(s, s"$dir/embeddings.parquet").select(col("vec_id"),
+      val norms = t(s, dir, "embeddings").select(col("vec_id"),
         Tx.quantized_dot(col("embedding"), col("embedding"))
           .cast("long").as("qnorm"))
         .localCheckpoint(false)
@@ -2168,19 +2168,19 @@ object PipelineQueries {
     // exact-at-any-scale complement to the sketch path (whose
     // exact-degenerate config only holds while groups fit the accuracy)
     "exact_quantiles_global" -> ((s, dir) =>
-      Sketches.exactQuantiles(Tables.parquet(s, s"$dir/events.parquet"), col("value"),
+      Sketches.exactQuantiles(t(s, dir, "events"), col("value"),
         Seq(0.25, 0.5, 0.9))),
 
     // per-group exact quantiles: group-partitioned rank window
     // (distributed across groups) + rank-selection filter
     "exact_quantiles_group" -> ((s, dir) =>
-      Sketches.exactQuantilesByGroup(Tables.parquet(s, s"$dir/events.parquet"),
+      Sketches.exactQuantilesByGroup(t(s, dir, "events"),
         col("event_type"), col("value"), Seq(0.25, 0.5, 0.9))),
 
     // vocabulary coverage curve (tokenizer sizing): top-v term share of
     // all token occurrences, distributed term rank, one aggregate pass
     "vocab_coverage" -> ((s, dir) =>
-      TextAnalysis.vocabCoverage(Tables.parquet(s, s"$dir/documents.parquet"), "text",
+      TextAnalysis.vocabCoverage(t(s, dir, "documents"), "text",
         Seq(5, 10, 20))),
 
     // Unicode NFC composition stats: planted decomposed sequences
@@ -2194,7 +2194,7 @@ object PipelineQueries {
       val ptext = concat(col("text"),
         when(id % 4 === 0, lit(" café")).otherwise(lit("")),
         when(id % 6 === 0, lit(" Ångstrom")).otherwise(lit("")))
-      Tables.parquet(s, s"$dir/documents.parquet").select(id, ptext.as("ptext"))
+      t(s, dir, "documents").select(id, ptext.as("ptext"))
         .select(col("doc_id"),
           length(col("ptext")).as("len_raw"),
           length(Scrub.nfc(col("ptext"))).as("len_nfc"),
@@ -2207,7 +2207,7 @@ object PipelineQueries {
     // different, canonically equal, so every copy must collapse onto
     // its original after Scrub.nfc
     "nfc_dedup" -> ((s, dir) => {
-      val d = Tables.parquet(s, s"$dir/documents.parquet").select(col("doc_id"), col("text"))
+      val d = t(s, dir, "documents").select(col("doc_id"), col("text"))
       // originals get the DECOMPOSED suffix (e + U+0301), copies the
       // COMPOSED one (U+00E9) — visually identical, byte-different
       val originals = d.select(col("doc_id"),
@@ -2231,7 +2231,7 @@ object PipelineQueries {
       val toks = TextAnalysis.tokenCount(col("text"))
       val score = TextAnalysis.hashedLinearScore(col("text"),
         TextAnalysis.demoQualityWeights)
-      Tables.parquet(s, s"$dir/documents.parquet").select(col("doc_id"),
+      t(s, dir, "documents").select(col("doc_id"),
         toks.as("n_tokens"), score.as("score"),
         when(toks > 0, floor(score * 100 / toks)).otherwise(lit(0))
           .cast("long").as("avg_x100"))
@@ -2244,8 +2244,8 @@ object PipelineQueries {
     // arithmetic; DuckDB replays the token fingerprint CLOSED-FORM
     // (power-table recursive CTE + list_sum — no list_reduce)
     "dsir_logweights" -> ((s, dir) => {
-      val d = Tables.parquet(s, s"$dir/documents.parquet").select(col("doc_id"), col("text"))
-      val target = Tables.parquet(s, s"$dir/documents.parquet").where(col("lang") === "en")
+      val d = t(s, dir, "documents").select(col("doc_id"), col("text"))
+      val target = t(s, dir, "documents").where(col("lang") === "en")
         .select(col("doc_id"), col("text"))
       TextAnalysis.importanceWeights(d, "doc_id", "text",
           TextAnalysis.importanceModel(d, target, "text", buckets = 64),
@@ -2257,8 +2257,8 @@ object PipelineQueries {
     // exact distributed median of logweight (>= threshold: ties keep
     // more, never less — same convention as the oracle's quantile_disc)
     "dsir_resample" -> ((s, dir) => {
-      val d = Tables.parquet(s, s"$dir/documents.parquet").select(col("doc_id"), col("text"))
-      val target = Tables.parquet(s, s"$dir/documents.parquet").where(col("lang") === "en")
+      val d = t(s, dir, "documents").select(col("doc_id"), col("text"))
+      val target = t(s, dir, "documents").where(col("lang") === "en")
         .select(col("doc_id"), col("text"))
       TextAnalysis.importanceResample(d, target, "doc_id", "text",
           buckets = 64, keepFraction = 0.5)
@@ -2270,7 +2270,7 @@ object PipelineQueries {
     // half the corpus (id+200000, same text) — exactly those copies
     // must vanish
     "incremental_dedup" -> ((s, dir) => {
-      val d = Tables.parquet(s, s"$dir/documents.parquet").select(col("doc_id"), col("text"))
+      val d = t(s, dir, "documents").select(col("doc_id"), col("text"))
       val corpus = d.where(col("doc_id") % 3 === 0)
       val fresh = d.where(col("doc_id") % 3 =!= 0)
         .unionAll(corpus.where(col("doc_id") % 2 === 0)
@@ -2285,7 +2285,7 @@ object PipelineQueries {
     // (its timing covers the whole save+probe lifecycle, like
     // sjoin_bucketed)
     "incremental_dedup_bucketed" -> ((s, dir) => {
-      val d = Tables.parquet(s, s"$dir/documents.parquet").select(col("doc_id"), col("text"))
+      val d = t(s, dir, "documents").select(col("doc_id"), col("text"))
       val corpus = d.where(col("doc_id") % 3 === 0)
       val fresh = d.where(col("doc_id") % 3 =!= 0)
         .unionAll(corpus.where(col("doc_id") % 2 === 0)
@@ -2299,7 +2299,7 @@ object PipelineQueries {
     // the Bloom pre-split path must return the IDENTICAL survivor set
     // (no false negatives; false positives cleared by the exact join)
     "incremental_dedup_bloom" -> ((s, dir) => {
-      val d = Tables.parquet(s, s"$dir/documents.parquet").select(col("doc_id"), col("text"))
+      val d = t(s, dir, "documents").select(col("doc_id"), col("text"))
       val corpus = d.where(col("doc_id") % 3 === 0)
       val fresh = d.where(col("doc_id") % 3 =!= 0)
         .unionAll(corpus.where(col("doc_id") % 2 === 0)

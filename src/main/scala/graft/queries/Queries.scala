@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Geo._
-import graft.io.Tables
+import graft.io.Tables.{table => t}
 import graft.tools.SpatialJoin
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -153,7 +153,7 @@ object Queries {
     * threshold, Q16 anti-joined distinct count) — all replayable
     * exactly by the oracle from the same arithmetic. */
   private def partsupp(spark: SparkSession, dir: String): DataFrame =
-    Tables.parquet(spark, s"$dir/lineitem.parquet")
+    t(spark, dir, "lineitem")
       .select(col("l_partkey").as("ps_partkey"),
         col("l_suppkey").as("ps_suppkey"))
       .distinct()
@@ -201,7 +201,7 @@ object Queries {
     *    read at query start and restored after. */
   private def streamClickPurchaseJoin(s: SparkSession, dir: String,
                                       joinType: String): DataFrame = {
-    val schema = Tables.parquet(s, s"$dir/events.parquet").schema
+    val schema = t(s, dir, "events").schema
     def src = EventTs.toTimestamp(s.readStream.schema(schema)
       .option("pathGlobFilter", "events.parquet").parquet(dir))
     val farTs = to_timestamp(lit("2200-01-01 00:00:00"))
@@ -249,7 +249,7 @@ object Queries {
   private def streamAsofRun(s: SparkSession, dir: String,
                             forward: Boolean): DataFrame = {
     import s.implicits._
-    val schema = Tables.parquet(s, s"$dir/events.parquet").schema
+    val schema = t(s, dir, "events").schema
     def src = EventTs.toTimestamp(s.readStream.schema(schema)
       .option("pathGlobFilter", "events.parquet").parquet(dir))
     // NULL guards mirror resampleEvents and run on BOTH engines: a
@@ -297,7 +297,7 @@ object Queries {
     * NULL keys together while the oracle's equality join never matches
     * them — guard rather than depend on the data). */
   private def resampleEvents(s: SparkSession, dir: String): DataFrame =
-    EventTs.toNanos(Tables.parquet(s, s"$dir/events.parquet"))
+    EventTs.toNanos(t(s, dir, "events"))
       .where(col("user_id").isNotNull)
       .select(col("user_id"), col("ts"), col("event_id"), col("value"))
 
@@ -327,7 +327,7 @@ object Queries {
   }
 
   private def custPoints(spark: SparkSession, dir: String): DataFrame =
-    Tables.parquet(spark, s"$dir/customer.parquet")
+    t(spark, dir, "customer")
       .withColumn("px", ((col("c_custkey") * 7919) % 1000).cast("double"))
       .withColumn("py", ((col("c_custkey") * 104729) % 1000).cast("double"))
       .withColumn("pt", st_point(col("px"), col("py")))
@@ -342,7 +342,7 @@ object Queries {
       cx - h, cy - h, cx + h, cy - h, cx + h, cy + h, cx - h, cy + h, cx - h, cy - h)
     val hole = array(
       cx - hh, cy - hh, cx - hh, cy + hh, cx + hh, cy + hh, cx + hh, cy - hh, cx - hh, cy - hh)
-    Tables.parquet(spark, s"$dir/part.parquet").withColumn("poly", array(shell, hole))
+    t(spark, dir, "part").withColumn("poly", array(shell, hole))
   }
 
   /** even-coordinate customer probe points for the diamond joins —
@@ -350,7 +350,7 @@ object Queries {
     * the winding-number result is unambiguous. */
   private def diamondProbePoints(spark: SparkSession, dir: String): DataFrame = {
     val (px, py) = sjoinCenterXY(col("c_custkey"))
-    Tables.parquet(spark, s"$dir/customer.parquet")
+    t(spark, dir, "customer")
       .withColumn("pt", st_point(px, py))
       .select(col("c_custkey"), col("pt"))
   }
@@ -365,7 +365,7 @@ object Queries {
       .cast("double")
     val py = when(hot, ((col("c_custkey") * 17) % 50) * 2).otherwise(cy)
       .cast("double")
-    Tables.parquet(spark, s"$dir/customer.parquet").withColumn("pt", st_point(px, py))
+    t(spark, dir, "customer").withColumn("pt", st_point(px, py))
   }
 
   /** The sjoin family's shared coordinate recipe (even centers from a
@@ -385,7 +385,7 @@ object Queries {
     val (sx, sy) = sjoinCenterXY(col("s_suppkey"))
     val r = diamondRadius(col("s_suppkey"))
     val ring = diamondRing(sx, sy, r)
-    Tables.parquet(spark, s"$dir/supplier.parquet").withColumn("diamond", array(ring))
+    t(spark, dir, "supplier").withColumn("diamond", array(ring))
       .withColumn("sx", sx).withColumn("sy", sy).withColumn("r", r)
   }
 
@@ -429,7 +429,7 @@ object Queries {
     // built with the st_collect_points aggregate (primitive buffer — no
     // per-row array allocation, unlike collect_list + flatten).
     "multipoint_bbox" -> ((s, dir) => {
-      val li = Tables.parquet(s, s"$dir/lineitem.parquet")
+      val li = t(s, dir, "lineitem")
         .withColumn("x", (col("l_partkey") % 1000).cast("double"))
         .withColumn("y", (col("l_suppkey") % 1000).cast("double"))
       li.groupBy(col("l_orderkey"))
@@ -451,7 +451,7 @@ object Queries {
     // SURVEY §2.8 line(segment)-vs-rect kernel; oracle = bbox overlap +
     // separating-axis corner-side test, exact in integer arithmetic.
     "line_bbox" -> ((s, dir) => {
-      val li = Tables.parquet(s, s"$dir/lineitem.parquet").where(col("l_linenumber") === 1)
+      val li = t(s, dir, "lineitem").where(col("l_linenumber") === 1)
       val x0 = (col("l_orderkey") % 1000).cast("double")
       val y0 = (col("l_partkey") % 1000).cast("double")
       val x1 = ((col("l_suppkey") * 13) % 1000).cast("double")
@@ -469,7 +469,7 @@ object Queries {
     // with half-diagonal r has area exactly 2r², integer-valued)
     "geo_area_by_nation" -> ((s, dir) => {
       supplierDiamonds(s, dir)
-        .join(broadcast(Tables.parquet(s, s"$dir/nation.parquet")),
+        .join(broadcast(t(s, dir, "nation")),
           col("s_nationkey") === col("n_nationkey"))
         .groupBy(col("n_name"))
         .agg(sum(st_area(col("diamond"))).cast("long").as("area_sum"),
@@ -496,7 +496,7 @@ object Queries {
 
     // SURVEY §2.6 st_length over a 3-vertex polyline.
     "length_lines" -> ((s, dir) => {
-      val li = Tables.parquet(s, s"$dir/lineitem.parquet").where(col("l_linenumber") === 1)
+      val li = t(s, dir, "lineitem").where(col("l_linenumber") === 1)
       val x0 = (col("l_orderkey") % 1000).cast("double")
       val y0 = (col("l_partkey") % 1000).cast("double")
       val x1 = (col("l_suppkey") % 1000).cast("double")
@@ -509,7 +509,7 @@ object Queries {
 
     // SURVEY §2.6 st_bounds over per-order multipoints.
     "bounds_multipoint" -> ((s, dir) => {
-      val li = Tables.parquet(s, s"$dir/lineitem.parquet")
+      val li = t(s, dir, "lineitem")
         .withColumn("x", (col("l_partkey") % 1000).cast("double"))
         .withColumn("y", (col("l_suppkey") % 1000).cast("double"))
       val mp = li.groupBy(col("l_orderkey"))
@@ -523,7 +523,7 @@ object Queries {
     // (st_total_bounds_agg — one aggregate, native partial aggregation);
     // the min/max-compose twin is covered by GeoFrame.totalBounds tests.
     "total_bounds_points" -> ((s, dir) => {
-      val sup = Tables.parquet(s, s"$dir/supplier.parquet")
+      val sup = t(s, dir, "supplier")
         .withColumn("pt", st_point(((col("s_suppkey") * 7919) % 1000).cast("double"),
           ((col("s_suppkey") * 104729) % 1000).cast("double")))
       val tb = st_total_bounds_agg(col("pt"))
@@ -593,7 +593,7 @@ object Queries {
         cx - h, cy - h, cx - h, cy + h, cx + h, cy + h, cx + h, cy - h, cx - h, cy - h)
       val holeCcw = array(
         cx - hh, cy - hh, cx + hh, cy - hh, cx + hh, cy + hh, cx - hh, cy + hh, cx - hh, cy - hh)
-      Tables.parquet(s, s"$dir/part.parquet")
+      t(s, dir, "part")
         .select(col("p_partkey"),
           st_area(st_oriented(array(shellCw, holeCcw))).as("area"))
     }),
@@ -765,7 +765,7 @@ object Queries {
     // integer SQL arithmetic — a genuine cross-engine differential for
     // the segment kernel itself, at join scale.
     "sjoin_lines" -> ((s, dir) => {
-      val li = Tables.parquet(s, s"$dir/lineitem.parquet")
+      val li = t(s, dir, "lineitem")
       val ax0 = (col("l_orderkey") % 50).cast("double")
       val ay0 = (col("l_partkey") % 50).cast("double")
       val dx = (col("l_suppkey") % 7).cast("double") - 3
@@ -774,7 +774,7 @@ object Queries {
         .where(!(col("l_suppkey") % 7 === 3 && (col("l_orderkey") * 3) % 7 === 3))
         .select(col("l_orderkey"), col("l_linenumber"),
           array(ax0, ay0, ax0 + dx, ay0 + dy).as("seg"))
-      val nat = Tables.parquet(s, s"$dir/nation.parquet")
+      val nat = t(s, dir, "nation")
       val bx0 = (col("n_nationkey") * 2).cast("double")
       val by0 = ((col("n_nationkey") * 7) % 50).cast("double")
       val bdy = ((col("n_nationkey") % 5) * 3).cast("double") - 6
@@ -790,7 +790,7 @@ object Queries {
     // sjoin_lines): driver R-tree over nation-segment bboxes, left side
     // never shuffles
     "sjoin_lines_bcast" -> ((s, dir) => {
-      val li = Tables.parquet(s, s"$dir/lineitem.parquet")
+      val li = t(s, dir, "lineitem")
       val ax0 = (col("l_orderkey") % 50).cast("double")
       val ay0 = (col("l_partkey") % 50).cast("double")
       val dx = (col("l_suppkey") % 7).cast("double") - 3
@@ -799,7 +799,7 @@ object Queries {
         .where(!(col("l_suppkey") % 7 === 3 && (col("l_orderkey") * 3) % 7 === 3))
         .select(col("l_orderkey"), col("l_linenumber"),
           array(ax0, ay0, ax0 + dx, ay0 + dy).as("seg"))
-      val nat = Tables.parquet(s, s"$dir/nation.parquet")
+      val nat = t(s, dir, "nation")
       val bx0 = (col("n_nationkey") * 2).cast("double")
       val by0 = ((col("n_nationkey") * 7) % 50).cast("double")
       val bdy = ((col("n_nationkey") % 5) * 3).cast("double") - 6
@@ -817,7 +817,7 @@ object Queries {
     // contract; lineitem's (orderkey, linenumber) is not a key in the
     // synthetic data).
     "sjoin_lines_left" -> ((s, dir) => {
-      val ord = Tables.parquet(s, s"$dir/orders.parquet")
+      val ord = t(s, dir, "orders")
       val ax0 = (col("o_orderkey") % 50).cast("double")
       val ay0 = (col("o_custkey") % 50).cast("double")
       val dx = (col("o_orderkey") % 7).cast("double") - 3
@@ -826,7 +826,7 @@ object Queries {
         .where(!(col("o_orderkey") % 7 === 3 && (col("o_custkey") * 3) % 7 === 3))
         .select(col("o_orderkey"),
           array(ax0, ay0, ax0 + dx, ay0 + dy).as("seg"))
-      val nat = Tables.parquet(s, s"$dir/nation.parquet")
+      val nat = t(s, dir, "nation")
       val bx0 = (col("n_nationkey") * 2).cast("double")
       val by0 = ((col("n_nationkey") * 7) % 50).cast("double")
       val bdy = ((col("n_nationkey") % 5) * 3).cast("double") - 6
@@ -847,7 +847,7 @@ object Queries {
     // past the small-input gate without touching session conf. Same
     // independent CLRS integer-arithmetic oracle as sjoin_lines.
     "sjoin_lines_skewed" -> ((s, dir) => {
-      val li = Tables.parquet(s, s"$dir/lineitem.parquet")
+      val li = t(s, dir, "lineitem")
       val hot = col("l_orderkey") % 10 =!= 0
       val ax0 = when(hot, (col("l_orderkey") * 13) % 8)
         .otherwise(col("l_orderkey") % 50).cast("double")
@@ -859,7 +859,7 @@ object Queries {
         .where(!(col("l_suppkey") % 7 === 3 && (col("l_orderkey") * 3) % 7 === 3))
         .select(col("l_orderkey"), col("l_linenumber"),
           array(ax0, ay0, ax0 + dx, ay0 + dy).as("seg"))
-      val nat = Tables.parquet(s, s"$dir/nation.parquet")
+      val nat = t(s, dir, "nation")
       val bx0 = (col("n_nationkey") * 2).cast("double")
       val by0 = ((col("n_nationkey") * 7) % 50).cast("double")
       val bdy = ((col("n_nationkey") % 5) * 3).cast("double") - 6
@@ -876,7 +876,7 @@ object Queries {
     // (partial aggregation native; the reference only has whole-array
     // total_bounds, this is its groupBy generalization).
     "group_total_bounds" -> ((s, dir) => {
-      val sup = Tables.parquet(s, s"$dir/supplier.parquet")
+      val sup = t(s, dir, "supplier")
         .withColumn("pt", st_point(((col("s_suppkey") * 7919) % 1000).cast("double"),
           ((col("s_suppkey") * 104729) % 1000).cast("double")))
       sup.groupBy(col("s_nationkey"))
@@ -899,7 +899,7 @@ object Queries {
     // any member point — point.py:87-149 support matrix beyond the line
     // and polygon cases proven elsewhere).
     "intersects_point_multipoint" -> ((s, dir) => {
-      val li = Tables.parquet(s, s"$dir/lineitem.parquet")
+      val li = t(s, dir, "lineitem")
       val pt = st_point((col("l_partkey") % 10).cast("double"),
         (col("l_suppkey") % 10).cast("double"))
       val mp = array(
@@ -914,7 +914,7 @@ object Queries {
     // (reference measures.py:21-23, test_geometry.py:67-77) — proven
     // against an oracle computing exactly those two segment lengths.
     "length_penup" -> ((s, dir) => {
-      val li = Tables.parquet(s, s"$dir/lineitem.parquet").where(col("l_linenumber") === 1)
+      val li = t(s, dir, "lineitem").where(col("l_linenumber") === 1)
       val x0 = (col("l_orderkey") % 1000).cast("double")
       val y0 = (col("l_partkey") % 1000).cast("double")
       val x1 = (col("l_suppkey") % 1000).cast("double")
@@ -945,7 +945,7 @@ object Queries {
     // the DISTRIBUTED two-pass global row number (Ranks.globalRowNumber),
     // not a single-task global window.
     "geom_sort_rank" -> ((s, dir) => {
-      val li = Tables.parquet(s, s"$dir/lineitem.parquet").where(col("l_linenumber") === 1)
+      val li = t(s, dir, "lineitem").where(col("l_linenumber") === 1)
       val x0 = (col("l_orderkey") % 7).cast("double")
       val y0 = (col("l_partkey") % 7).cast("double")
       val x1 = (col("l_suppkey") % 7).cast("double")
@@ -965,7 +965,7 @@ object Queries {
       val sq1 = array(cx - h, cy - h, cx + h, cy - h, cx + h, cy + h, cx - h, cy + h, cx - h, cy - h)
       val off = cy + lit(3000.0)
       val sq2 = array(cx - h, off - h, cx + h, off - h, cx + h, off + h, cx - h, off + h, cx - h, off - h)
-      Tables.parquet(s, s"$dir/part.parquet").select(col("p_partkey"),
+      t(s, dir, "part").select(col("p_partkey"),
         st_length(st_boundary(array(array(sq1), array(sq2)))).as("blen"))
     }),
 
@@ -1110,7 +1110,7 @@ object Queries {
     // with corpus bytes.
     "jsonl_roundtrip" -> ((s, dir) => {
       val out = processTmpDir(s, "jsonl", dir)
-      Tables.parquet(s, s"$dir/documents.parquet").select(col("doc_id"), col("text"))
+      t(s, dir, "documents").select(col("doc_id"), col("text"))
         .write.json(out)
       collectAndClean(s, out,
         textDigest(s.read.json(out), withLang = false))
@@ -1122,7 +1122,7 @@ object Queries {
     // parquet, so any quoting/inference loss hash-mismatches.
     "csv_roundtrip" -> ((s, dir) => {
       val out = processTmpDir(s, "csv", dir)
-      Tables.parquet(s, s"$dir/documents.parquet").select(col("doc_id"), col("lang"), col("text"))
+      t(s, dir, "documents").select(col("doc_id"), col("lang"), col("text"))
         .write.option("header", "true").option("escape", "\"").csv(out)
       collectAndClean(s, out,
         textDigest(s.read.option("header", "true").option("multiLine", "true")
@@ -1136,7 +1136,7 @@ object Queries {
     // transparently re-read the compressed shards losslessly.
     "jsonl_gzip_roundtrip" -> ((s, dir) => {
       val out = processTmpDir(s, "jsonlgz", dir)
-      Tables.parquet(s, s"$dir/documents.parquet").select(col("doc_id"), col("text"))
+      t(s, dir, "documents").select(col("doc_id"), col("text"))
         .write.option("compression", "gzip").json(out)
       collectAndClean(s, out,
         textDigest(s.read.json(out), withLang = false))
@@ -1147,7 +1147,7 @@ object Queries {
     // write+read bit-for-bit vs the parquet oracle.
     "orc_roundtrip" -> ((s, dir) => {
       val out = processTmpDir(s, "orc", dir)
-      Tables.parquet(s, s"$dir/documents.parquet").select(col("doc_id"), col("lang"), col("text"))
+      t(s, dir, "documents").select(col("doc_id"), col("lang"), col("text"))
         .write.orc(out)
       collectAndClean(s, out, textDigest(s.read.orc(out), withLang = true))
     }),
@@ -1158,7 +1158,7 @@ object Queries {
     // parquet oracle.
     "xml_roundtrip" -> ((s, dir) => {
       val out = processTmpDir(s, "xml", dir)
-      Tables.parquet(s, s"$dir/documents.parquet").select(col("doc_id"), col("lang"), col("text"))
+      t(s, dir, "documents").select(col("doc_id"), col("lang"), col("text"))
         .write.option("rowTag", "doc").format("xml").save(out)
       collectAndClean(s, out, textDigest(s.read.option("rowTag", "doc")
         .schema("doc_id LONG, lang STRING, text STRING").format("xml")
@@ -1179,7 +1179,7 @@ object Queries {
     // FunctionRegistry path under the driver gate, not just the
     // DataFrame API.
     "sql_surface" -> ((s, dir) => {
-      Tables.parquet(s, s"$dir/part.parquet").createOrReplaceTempView("graft_parts")
+      t(s, dir, "part").createOrReplaceTempView("graft_parts")
       s.sql("""
         SELECT p_partkey,
                st_area(poly) AS area,
@@ -1198,7 +1198,7 @@ object Queries {
 
     // Relational sanity: TPC-H Q1-style aggregate (integer-valued sums).
     "q1_agg" -> ((s, dir) => {
-      Tables.parquet(s, s"$dir/lineitem.parquet")
+      t(s, dir, "lineitem")
         .groupBy(col("l_returnflag"), col("l_linestatus"))
         .agg(sum(col("l_quantity")).as("sum_qty"), count(lit(1)).as("n"))
     }),
@@ -1212,12 +1212,12 @@ object Queries {
     // never shuffles before its group-by.
     "q3_shipping" -> ((s, dir) => {
       val cutoff = lit("1998-06-01").cast("timestamp")
-      val c = Tables.parquet(s, s"$dir/customer.parquet")
+      val c = t(s, dir, "customer")
         .where(col("c_mktsegment") === "BUILDING").select(col("c_custkey"))
-      val o = Tables.parquet(s, s"$dir/orders.parquet").where(col("o_orderdate") < cutoff)
+      val o = t(s, dir, "orders").where(col("o_orderdate") < cutoff)
         .select(col("o_orderkey"), col("o_custkey"), col("o_orderdate"),
           col("o_orderpriority"))
-      val l = Tables.parquet(s, s"$dir/lineitem.parquet").where(col("l_shipdate") > cutoff)
+      val l = t(s, dir, "lineitem").where(col("l_shipdate") > cutoff)
         .select(col("l_orderkey"),
           (round(col("l_extendedprice") * 100).cast("long") *
             (lit(100L) - round(col("l_discount") * 100).cast("long")))
@@ -1239,18 +1239,18 @@ object Queries {
     "q5_local_supplier" -> ((s, dir) => {
       val lo = lit("1996-01-01").cast("timestamp")
       val hi = lit("1997-01-01").cast("timestamp")
-      val nat = Tables.parquet(s, s"$dir/nation.parquet").join(
-        Tables.parquet(s, s"$dir/region.parquet").where(col("r_name") === "ASIA"),
+      val nat = t(s, dir, "nation").join(
+        t(s, dir, "region").where(col("r_name") === "ASIA"),
         col("n_regionkey") === col("r_regionkey"))
         .select(col("n_nationkey"), col("n_name"))
-      val sup = Tables.parquet(s, s"$dir/supplier.parquet")
+      val sup = t(s, dir, "supplier")
         .join(broadcast(nat), col("s_nationkey") === col("n_nationkey"))
         .select(col("s_suppkey"), col("s_nationkey"), col("n_name"))
-      val cust = Tables.parquet(s, s"$dir/customer.parquet").select(col("c_custkey"), col("c_nationkey"))
-      val ord = Tables.parquet(s, s"$dir/orders.parquet")
+      val cust = t(s, dir, "customer").select(col("c_custkey"), col("c_nationkey"))
+      val ord = t(s, dir, "orders")
         .where(col("o_orderdate") >= lo && col("o_orderdate") < hi)
         .select(col("o_orderkey"), col("o_custkey"))
-      val li = Tables.parquet(s, s"$dir/lineitem.parquet").select(col("l_orderkey"), col("l_suppkey"),
+      val li = t(s, dir, "lineitem").select(col("l_orderkey"), col("l_suppkey"),
         (round(col("l_extendedprice") * 100).cast("long") *
           (lit(100L) - round(col("l_discount") * 100).cast("long"))).as("rev"))
       li.join(broadcast(sup), col("l_suppkey") === col("s_suppkey"))
@@ -1268,12 +1268,12 @@ object Queries {
     // Quantities are integer-valued doubles → cast to long for exact
     // cross-engine sums.
     "q18_large_orders" -> ((s, dir) => {
-      val big = Tables.parquet(s, s"$dir/lineitem.parquet")
+      val big = t(s, dir, "lineitem")
         .groupBy(col("l_orderkey"))
         .agg(sum(col("l_quantity").cast("long")).as("total_qty"))
         .where(col("total_qty") > 150)
-      big.join(Tables.parquet(s, s"$dir/orders.parquet"), col("l_orderkey") === col("o_orderkey"))
-        .join(Tables.parquet(s, s"$dir/customer.parquet"), col("o_custkey") === col("c_custkey"))
+      big.join(t(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
+        .join(t(s, dir, "customer"), col("o_custkey") === col("c_custkey"))
         .select(col("c_name"), col("c_custkey"), col("o_orderkey"),
           col("o_orderdate"), col("total_qty"))
     }),
@@ -1289,17 +1289,17 @@ object Queries {
     // exactness.
     "q7_volume_shipping" -> ((s, dir) => {
       val (n1, n2) = ("NATION_1", "NATION_2")
-      val nat = Tables.parquet(s, s"$dir/nation.parquet")
+      val nat = t(s, dir, "nation")
         .where(col("n_name").isin(n1, n2))
         .select(col("n_nationkey"), col("n_name"))
-      val sup = Tables.parquet(s, s"$dir/supplier.parquet")
+      val sup = t(s, dir, "supplier")
         .join(broadcast(nat), col("s_nationkey") === col("n_nationkey"))
         .select(col("s_suppkey"), col("n_name").as("supp_nation"))
-      val cust = Tables.parquet(s, s"$dir/customer.parquet")
+      val cust = t(s, dir, "customer")
         .join(broadcast(nat), col("c_nationkey") === col("n_nationkey"))
         .select(col("c_custkey"), col("n_name").as("cust_nation"))
-      val ord = Tables.parquet(s, s"$dir/orders.parquet").select(col("o_orderkey"), col("o_custkey"))
-      val li = Tables.parquet(s, s"$dir/lineitem.parquet")
+      val ord = t(s, dir, "orders").select(col("o_orderkey"), col("o_custkey"))
+      val li = t(s, dir, "lineitem")
         .where(col("l_shipdate") >= lit("1996-01-01").cast("timestamp") &&
           col("l_shipdate") < lit("1998-01-01").cast("timestamp"))
         .select(col("l_orderkey"), col("l_suppkey"),
@@ -1326,25 +1326,25 @@ object Queries {
     // DECIMAL(38,0); sums here are ≤ ~5e16.)
     "q8_market_share" -> ((s, dir) => {
       val target = "NATION_6"
-      val amNat = Tables.parquet(s, s"$dir/nation.parquet").join(
-        Tables.parquet(s, s"$dir/region.parquet").where(col("r_name") === "AMERICA"),
+      val amNat = t(s, dir, "nation").join(
+        t(s, dir, "region").where(col("r_name") === "AMERICA"),
         col("n_regionkey") === col("r_regionkey"))
         .select(col("n_nationkey"))
-      val cust = Tables.parquet(s, s"$dir/customer.parquet")
+      val cust = t(s, dir, "customer")
         .join(broadcast(amNat), col("c_nationkey") === col("n_nationkey"))
         .select(col("c_custkey"))
-      val ord = Tables.parquet(s, s"$dir/orders.parquet")
+      val ord = t(s, dir, "orders")
         .where(col("o_orderdate") >= lit("1996-01-01").cast("timestamp") &&
           col("o_orderdate") < lit("1998-01-01").cast("timestamp"))
         .select(col("o_orderkey"), col("o_custkey"),
           year(col("o_orderdate")).cast("long").as("o_year"))
-      val par = Tables.parquet(s, s"$dir/part.parquet").where(col("p_type") === "ECONOMY")
+      val par = t(s, dir, "part").where(col("p_type") === "ECONOMY")
         .select(col("p_partkey"))
-      val supN = Tables.parquet(s, s"$dir/supplier.parquet")
-        .join(broadcast(Tables.parquet(s, s"$dir/nation.parquet")),
+      val supN = t(s, dir, "supplier")
+        .join(broadcast(t(s, dir, "nation")),
           col("s_nationkey") === col("n_nationkey"))
         .select(col("s_suppkey"), col("n_name").as("supp_nation"))
-      val li = Tables.parquet(s, s"$dir/lineitem.parquet")
+      val li = t(s, dir, "lineitem")
         .select(col("l_orderkey"), col("l_partkey"), col("l_suppkey"),
           (round(col("l_extendedprice") * 100).cast("long") *
             (lit(100L) - round(col("l_discount") * 100).cast("long"))).as("rev"))
@@ -1366,10 +1366,10 @@ object Queries {
     // late lines it has, and Spark's semi-join short-circuits per key.
     // "Late" = any line shipped > 90 days after the order date.
     "q4_order_priority" -> ((s, dir) => {
-      val ord = Tables.parquet(s, s"$dir/orders.parquet")
+      val ord = t(s, dir, "orders")
         .where(col("o_orderdate") >= lit("1996-07-01").cast("timestamp") &&
           col("o_orderdate") < lit("1996-10-01").cast("timestamp"))
-      val li = Tables.parquet(s, s"$dir/lineitem.parquet").select(col("l_orderkey"), col("l_shipdate"))
+      val li = t(s, dir, "lineitem").select(col("l_orderkey"), col("l_shipdate"))
       ord.join(li, col("o_orderkey") === col("l_orderkey") &&
           col("l_shipdate") > col("o_orderdate") + expr("INTERVAL 90 DAYS"),
           "left_semi")
@@ -1384,11 +1384,11 @@ object Queries {
     // conditional sums — never two scans. The year filter reaches the
     // lineitem parquet scan (PushedFilters).
     "q12_ship_priority" -> ((s, dir) => {
-      val li = Tables.parquet(s, s"$dir/lineitem.parquet")
+      val li = t(s, dir, "lineitem")
         .where(col("l_shipdate") >= lit("1996-01-01").cast("timestamp") &&
           col("l_shipdate") < lit("1997-01-01").cast("timestamp"))
         .select(col("l_orderkey"), col("l_shipdate"))
-      val ord = Tables.parquet(s, s"$dir/orders.parquet")
+      val ord = t(s, dir, "orders")
         .select(col("o_orderkey"), col("o_orderdate"), col("o_orderpriority"))
       val hi = col("o_orderpriority").isin("1-URGENT", "2-HIGH")
       li.join(ord, col("l_orderkey") === col("o_orderkey"))
@@ -1408,10 +1408,10 @@ object Queries {
     // kept by a LEFT SEMI join on the surviving keys — each stage
     // strictly shrinks what flows to the next, nothing is recomputed.
     "q20_promotion_suppliers" -> ((s, dir) => {
-      val smallParts = Tables.parquet(s, s"$dir/part.parquet")
+      val smallParts = t(s, dir, "part")
         .where(col("p_name").startsWith("small "))
         .select(col("p_partkey"))
-      val shipped = Tables.parquet(s, s"$dir/lineitem.parquet")
+      val shipped = t(s, dir, "lineitem")
         .where(col("l_shipdate") >= lit("1996-01-01").cast("timestamp") &&
           col("l_shipdate") < lit("1997-01-01").cast("timestamp"))
         .join(broadcast(smallParts),
@@ -1420,9 +1420,9 @@ object Queries {
         .agg(sum(col("l_quantity").cast("long")).as("__qty"))
         .where(col("__qty") > 50)
         .select(col("l_suppkey")).distinct()
-      Tables.parquet(s, s"$dir/supplier.parquet")
+      t(s, dir, "supplier")
         .join(shipped, col("s_suppkey") === col("l_suppkey"), "left_semi")
-        .join(broadcast(Tables.parquet(s, s"$dir/nation.parquet")),
+        .join(broadcast(t(s, dir, "nation")),
           col("s_nationkey") === col("n_nationkey"))
         .select(col("s_name"), col("n_name"))
     }),
@@ -1431,7 +1431,7 @@ object Queries {
     // every predicate pushed to the scan, revenue integer-staged as
     // Σ cents·pct (exact cross-engine, no double summation order)
     "q6_forecast_revenue" -> ((s, dir) => {
-      Tables.parquet(s, s"$dir/lineitem.parquet")
+      t(s, dir, "lineitem")
         .where(col("l_shipdate") >= lit("1996-01-01").cast("timestamp") &&
           col("l_shipdate") < lit("1997-01-01").cast("timestamp") &&
           round(col("l_discount") * 100).cast("long").between(5, 7) &&
@@ -1449,8 +1449,8 @@ object Queries {
     // "Late" = shipped > 60 days after the order date (the reduced
     // schema's stand-in for receiptdate > commitdate).
     "q21_waiting_supplier" -> ((s, dir) => {
-      val o = Tables.parquet(s, s"$dir/orders.parquet").select(col("o_orderkey"), col("o_orderdate"))
-      val l = Tables.parquet(s, s"$dir/lineitem.parquet")
+      val o = t(s, dir, "orders").select(col("o_orderkey"), col("o_orderdate"))
+      val l = t(s, dir, "lineitem")
         .select(col("l_orderkey"), col("l_suppkey"), col("l_shipdate"))
       val late = l.join(o, col("l_orderkey") === col("o_orderkey"))
         .where(col("l_shipdate") > col("o_orderdate") + expr("INTERVAL 60 DAYS"))
@@ -1466,7 +1466,7 @@ object Queries {
           col("l_suppkey") =!= col("__o3_supp"), "left_anti")
         .groupBy(col("l_suppkey"))
         .agg(count(lit(1)).as("numwait"))
-        .join(broadcast(Tables.parquet(s, s"$dir/supplier.parquet")
+        .join(broadcast(t(s, dir, "supplier")
           .select(col("s_suppkey"), col("s_name"))),
           col("l_suppkey") === col("s_suppkey"))
         .select(col("s_name"), col("numwait"))
@@ -1478,8 +1478,8 @@ object Queries {
     // aggregate's input is one row per customer (already tiny relative
     // to orders), the classic reduce-then-reduce shape.
     "q13_custdist" -> ((s, dir) => {
-      Tables.parquet(s, s"$dir/customer.parquet").select(col("c_custkey"))
-        .join(Tables.parquet(s, s"$dir/orders.parquet").select(col("o_orderkey"), col("o_custkey")),
+      t(s, dir, "customer").select(col("c_custkey"))
+        .join(t(s, dir, "orders").select(col("o_orderkey"), col("o_custkey")),
           col("c_custkey") === col("o_custkey"), "left_outer")
         .groupBy(col("c_custkey"))
         .agg(count(col("o_orderkey")).as("c_count"))
@@ -1494,18 +1494,18 @@ object Queries {
     // test is a LEFT ANTI join on the fact's supplier key. One-row
     // aggregate broadcast; the anti join shuffles only supplier keys.
     "q22_idle_suppliers" -> ((s, dir) => {
-      val sup = Tables.parquet(s, s"$dir/supplier.parquet").select(col("s_suppkey"),
+      val sup = t(s, dir, "supplier").select(col("s_suppkey"),
         col("s_nationkey"),
         round(col("s_acctbal") * 100).cast("long").as("cents"))
       val tot = sup.where(col("cents") > 0)
         .agg(sum(col("cents")).as("tc"), count(lit(1)).as("nc"))
       sup.crossJoin(broadcast(tot))
         .where(col("cents") * col("nc") > col("tc"))
-        .join(Tables.parquet(s, s"$dir/lineitem.parquet")
+        .join(t(s, dir, "lineitem")
             .where(col("l_shipdate") >= lit("2001-11-01").cast("timestamp"))
             .select(col("l_suppkey")),
           col("s_suppkey") === col("l_suppkey"), "left_anti")
-        .join(broadcast(Tables.parquet(s, s"$dir/nation.parquet")),
+        .join(broadcast(t(s, dir, "nation")),
           col("s_nationkey") === col("n_nationkey"))
         .groupBy(col("n_name"))
         .agg(count(lit(1)).as("numcust"), sum(col("cents")).as("totacctbal_i"))
@@ -1517,11 +1517,11 @@ object Queries {
     // correlated re-execution. Region/nation are broadcast dims; the
     // partsupp side shuffles once on the part key.
     "q2_min_cost_supplier" -> ((s, dir) => {
-      val eurNat = Tables.parquet(s, s"$dir/nation.parquet").join(
-          broadcast(Tables.parquet(s, s"$dir/region.parquet").where(col("r_name") === "EUROPE")),
+      val eurNat = t(s, dir, "nation").join(
+          broadcast(t(s, dir, "region").where(col("r_name") === "EUROPE")),
           col("n_regionkey") === col("r_regionkey"))
         .select(col("n_nationkey"), col("n_name"))
-      val eurSup = Tables.parquet(s, s"$dir/supplier.parquet")
+      val eurSup = t(s, dir, "supplier")
         .join(broadcast(eurNat), col("s_nationkey") === col("n_nationkey"))
         .select(col("s_suppkey"), col("n_name"))
       val ps = partsupp(s, dir)
@@ -1532,7 +1532,7 @@ object Queries {
         .agg(min(col("ps_supplycost_i")).as("min_cost_i"))
       ps.join(minCost, Seq("ps_partkey"))
         .where(col("ps_supplycost_i") === col("min_cost_i"))
-        .join(broadcast(Tables.parquet(s, s"$dir/part.parquet").where(col("p_size") <= 15)
+        .join(broadcast(t(s, dir, "part").where(col("p_size") <= 15)
           .select(col("p_partkey"), col("p_brand"))),
           col("ps_partkey") === col("p_partkey"))
         .select(col("p_partkey"), col("p_brand"), col("ps_suppkey"),
@@ -1545,15 +1545,15 @@ object Queries {
     // only shuffles are partsupp's build and the final (nation, year)
     // aggregate (partial map-side).
     "q9_product_profit" -> ((s, dir) => {
-      val par = Tables.parquet(s, s"$dir/part.parquet").where(col("p_name").contains("cold"))
+      val par = t(s, dir, "part").where(col("p_name").contains("cold"))
         .select(col("p_partkey"))
-      val supN = Tables.parquet(s, s"$dir/supplier.parquet")
-        .join(broadcast(Tables.parquet(s, s"$dir/nation.parquet")),
+      val supN = t(s, dir, "supplier")
+        .join(broadcast(t(s, dir, "nation")),
           col("s_nationkey") === col("n_nationkey"))
         .select(col("s_suppkey"), col("n_name"))
-      val ord = Tables.parquet(s, s"$dir/orders.parquet").select(col("o_orderkey"),
+      val ord = t(s, dir, "orders").select(col("o_orderkey"),
         year(col("o_orderdate")).cast("long").as("o_year"))
-      val li = Tables.parquet(s, s"$dir/lineitem.parquet").select(
+      val li = t(s, dir, "lineitem").select(
         col("l_orderkey"), col("l_partkey"), col("l_suppkey"),
         col("l_quantity").cast("long").as("qty_l"),
         (round(col("l_extendedprice") * 100).cast("long") *
@@ -1576,7 +1576,7 @@ object Queries {
     // aggregates total; the threshold is a one-row broadcast, and the
     // comparison is exact integer cross-multiplication.
     "q11_important_stock" -> ((s, dir) => {
-      val evenSup = Tables.parquet(s, s"$dir/supplier.parquet")
+      val evenSup = t(s, dir, "supplier")
         .where(col("s_nationkey") % 2 === 0).select(col("s_suppkey"))
       val perPart = partsupp(s, dir)
         .join(broadcast(evenSup), col("ps_suppkey") === col("s_suppkey"))
@@ -1595,10 +1595,10 @@ object Queries {
     // filter as a broadcast. count_distinct partial-aggregates its
     // dedup map-side.
     "q16_parts_supplier_cnt" -> ((s, dir) => {
-      val par = Tables.parquet(s, s"$dir/part.parquet")
+      val par = t(s, dir, "part")
         .where(col("p_brand") =!= "Brand#13" && col("p_size") % 2 === 0)
         .select(col("p_partkey"), col("p_brand"), col("p_type"), col("p_size"))
-      val complaints = Tables.parquet(s, s"$dir/supplier.parquet")
+      val complaints = t(s, dir, "supplier")
         .where(col("s_suppkey") % 10 === 7).select(col("s_suppkey"))
       partsupp(s, dir)
         .join(complaints, col("ps_suppkey") === col("s_suppkey"), "left_anti")
@@ -1617,7 +1617,7 @@ object Queries {
     "zorder_numeric_prune" -> ((s, dir) => {
       val out = processTmpDir(s, "zorder", dir)
       graft.io.GeoParquet.packNumericToParquet(
-        Tables.parquet(s, s"$dir/documents.parquet").select(col("doc_id"), col("lang"), col("n_chars")),
+        t(s, dir, "documents").select(col("doc_id"), col("lang"), col("n_chars")),
         "n_chars", "doc_id", out, numPartitions = 8)
       collectAndClean(s, out,
         graft.io.GeoParquet.readNumericRange(s, out, 100, 50, 2000, 250)
@@ -1638,7 +1638,7 @@ object Queries {
     "zorder_multi_prune" -> ((s, dir) => {
       val out = processTmpDir(s, "zorder3", dir)
       graft.io.GeoParquet.packZOrderToParquet(
-        Tables.parquet(s, s"$dir/lineitem.parquet").select(col("l_orderkey"), col("l_returnflag"),
+        t(s, dir, "lineitem").select(col("l_orderkey"), col("l_returnflag"),
           col("l_quantity"), col("l_discount"), col("l_extendedprice")),
         Seq("l_quantity", "l_discount", "l_extendedprice"), out,
         numPartitions = 8)
@@ -1664,7 +1664,7 @@ object Queries {
     "zorder_append_prune" -> ((s, dir) => {
       val out = processTmpDir(s, "zappend", dir)
       val zcols = Seq("l_quantity", "l_discount", "l_extendedprice")
-      val li = Tables.parquet(s, s"$dir/lineitem.parquet").select(col("l_orderkey"),
+      val li = t(s, dir, "lineitem").select(col("l_orderkey"),
         col("l_returnflag"), col("l_quantity"), col("l_discount"),
         col("l_extendedprice"))
       graft.io.GeoParquet.packZOrderToParquet(
@@ -1698,7 +1698,7 @@ object Queries {
       // materialized — see collectAndClean
       val out = processTmpDir(s, "ztt", dir)
       val zcols = Seq("l_quantity", "l_extendedprice")
-      val li = Tables.parquet(s, s"$dir/lineitem.parquet").select(col("l_orderkey"),
+      val li = t(s, dir, "lineitem").select(col("l_orderkey"),
         col("l_returnflag"), col("l_quantity"), col("l_extendedprice"))
       graft.io.GeoParquet.packZOrderToParquet(
         li.where(col("l_orderkey") % 3 === 0), zcols, out, numPartitions = 4)
@@ -1731,7 +1731,7 @@ object Queries {
     "zorder_compact_travel" -> ((s, dir) => {
       val out = processTmpDir(s, "zct", dir)
       val zcols = Seq("l_quantity", "l_extendedprice")
-      val li = Tables.parquet(s, s"$dir/lineitem.parquet").select(col("l_orderkey"),
+      val li = t(s, dir, "lineitem").select(col("l_orderkey"),
         col("l_returnflag"), col("l_quantity"), col("l_extendedprice"))
       graft.io.GeoParquet.packZOrderToParquet(
         li.where(col("l_orderkey") % 3 === 0), zcols, out, numPartitions = 4)
@@ -1777,7 +1777,7 @@ object Queries {
     // PlanSpec) — the non-pruned languages cost zero IO.
     "hive_partition_prune" -> ((s, dir) => {
       val out = processTmpDir(s, "hivepart", dir)
-      Tables.parquet(s, s"$dir/documents.parquet").select(col("doc_id"), col("lang"), col("text"))
+      t(s, dir, "documents").select(col("doc_id"), col("lang"), col("text"))
         .write.partitionBy("lang").parquet(out)
       collectAndClean(s, out,
         s.read.parquet(out).where(col("lang").isin("en", "fr"))
@@ -1792,7 +1792,7 @@ object Queries {
     // months; count/sum prove both the union and the null-fill.
     "merge_schema_read" -> ((s, dir) => {
       val out = processTmpDir(s, "mergeschema", dir)
-      val docs = Tables.parquet(s, s"$dir/documents.parquet")
+      val docs = t(s, dir, "documents")
       docs.where(col("doc_id") % 2 === 0)
         .select(col("doc_id"), col("lang"))
         .write.parquet(s"$out/b=1")
@@ -1815,7 +1815,7 @@ object Queries {
     // LakeSpec, the content here.
     "compact_small_files" -> ((s, dir) => {
       val out = processTmpDir(s, "compact", dir)
-      val docs = Tables.parquet(s, s"$dir/documents.parquet").select(col("doc_id"), col("text"))
+      val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
       docs.repartition(64).write.parquet(s"$out/small")
       s.read.parquet(s"$out/small").repartition(4)
         .write.parquet(s"$out/compact")
@@ -1833,19 +1833,19 @@ object Queries {
     // after the joins is ∝ customers, and the top-20 is a
     // WindowGroupLimit-style bounded sort.
     "q10_returned_items" -> ((s, dir) => {
-      val ord = Tables.parquet(s, s"$dir/orders.parquet")
+      val ord = t(s, dir, "orders")
         .where(col("o_orderdate") >= lit("1996-01-01").cast("timestamp") &&
           col("o_orderdate") < lit("1996-04-01").cast("timestamp"))
         .select(col("o_orderkey"), col("o_custkey"))
-      val li = Tables.parquet(s, s"$dir/lineitem.parquet").where(col("l_returnflag") === "R")
+      val li = t(s, dir, "lineitem").where(col("l_returnflag") === "R")
         .select(col("l_orderkey"),
           (round(col("l_extendedprice") * 100).cast("long") *
             (lit(100L) - round(col("l_discount") * 100).cast("long")))
             .as("rev"))
       li.join(ord, col("l_orderkey") === col("o_orderkey"))
-        .join(Tables.parquet(s, s"$dir/customer.parquet").select(col("c_custkey"), col("c_name"),
+        .join(t(s, dir, "customer").select(col("c_custkey"), col("c_name"),
           col("c_nationkey")), col("o_custkey") === col("c_custkey"))
-        .join(broadcast(Tables.parquet(s, s"$dir/nation.parquet")),
+        .join(broadcast(t(s, dir, "nation")),
           col("c_nationkey") === col("n_nationkey"))
         .groupBy(col("c_custkey"), col("c_name"), col("n_name"))
         .agg(sum(col("rev")).as("revenue_i"))
@@ -1857,14 +1857,14 @@ object Queries {
     // from PROMO parts — numerator and denominator from ONE conditional
     // grouped pass, share as integer permille
     "q14_promo_share" -> ((s, dir) => {
-      val li = Tables.parquet(s, s"$dir/lineitem.parquet")
+      val li = t(s, dir, "lineitem")
         .where(col("l_shipdate") >= lit("1997-03-01").cast("timestamp") &&
           col("l_shipdate") < lit("1997-04-01").cast("timestamp"))
         .select(col("l_partkey"),
           (round(col("l_extendedprice") * 100).cast("long") *
             (lit(100L) - round(col("l_discount") * 100).cast("long")))
             .as("rev"))
-      li.join(broadcast(Tables.parquet(s, s"$dir/part.parquet").select(col("p_partkey"),
+      li.join(broadcast(t(s, dir, "part").select(col("p_partkey"),
           col("p_type"))), col("l_partkey") === col("p_partkey"))
         .agg(sum(when(col("p_type") === "PROMO", col("rev")).otherwise(0L))
           .as("promo_rev_i"), sum(col("rev")).as("total_rev_i"))
@@ -1878,12 +1878,12 @@ object Queries {
     // bands) below the join and hash-join on partkey, evaluating the
     // residual disjunction on joined rows
     "q19_disjunctive" -> ((s, dir) => {
-      val li = Tables.parquet(s, s"$dir/lineitem.parquet").select(col("l_partkey"),
+      val li = t(s, dir, "lineitem").select(col("l_partkey"),
         col("l_quantity"),
         (round(col("l_extendedprice") * 100).cast("long") *
           (lit(100L) - round(col("l_discount") * 100).cast("long")))
           .as("rev"))
-      val par = Tables.parquet(s, s"$dir/part.parquet").select(col("p_partkey"), col("p_brand"),
+      val par = t(s, dir, "part").select(col("p_partkey"), col("p_brand"),
         col("p_size"))
       li.join(broadcast(par), col("l_partkey") === col("p_partkey"))
         .where((col("p_brand") === "Brand#1" && col("p_size").between(1, 15) &&
@@ -1900,7 +1900,7 @@ object Queries {
     // broadcasts back as the filter (no self-join of the full
     // aggregate, no window over all suppliers)
     "q15_top_supplier" -> ((s, dir) => {
-      val rev = Tables.parquet(s, s"$dir/lineitem.parquet")
+      val rev = t(s, dir, "lineitem")
         .where(col("l_shipdate") >= lit("1996-01-01").cast("timestamp") &&
           col("l_shipdate") < lit("1996-04-01").cast("timestamp"))
         .groupBy(col("l_suppkey"))
@@ -1910,7 +1910,7 @@ object Queries {
       val mx = rev.agg(max(col("total_rev_i")).as("__mx"))
       rev.crossJoin(broadcast(mx))
         .where(col("total_rev_i") === col("__mx"))
-        .join(broadcast(Tables.parquet(s, s"$dir/supplier.parquet")
+        .join(broadcast(t(s, dir, "supplier")
           .select(col("s_suppkey"), col("s_name"))),
           col("l_suppkey") === col("s_suppkey"))
         .select(col("s_suppkey"), col("s_name"), col("total_rev_i"))
@@ -1922,9 +1922,9 @@ object Queries {
     // and the 0.2·avg comparison is the integer cross-multiplication
     // qty·5·count < sum (no division anywhere)
     "q17_small_quantity" -> ((s, dir) => {
-      val par = Tables.parquet(s, s"$dir/part.parquet").where(col("p_brand") === "Brand#1")
+      val par = t(s, dir, "part").where(col("p_brand") === "Brand#1")
         .select(col("p_partkey"))
-      val li = Tables.parquet(s, s"$dir/lineitem.parquet")
+      val li = t(s, dir, "lineitem")
         .join(broadcast(par), col("l_partkey") === col("p_partkey"))
         .select(col("l_partkey"), col("l_quantity").cast("long").as("qty"),
           round(col("l_extendedprice") * 100).cast("long").as("cents"))
@@ -1938,7 +1938,7 @@ object Queries {
     // ROLLUP (hierarchical subtotals — flag, flag+status, grand total):
     // the other grouping-sets shape next to CUBE, same Expand plan
     "rollup_agg" -> ((s, dir) => {
-      Tables.parquet(s, s"$dir/lineitem.parquet")
+      t(s, dir, "lineitem")
         .rollup(col("l_returnflag"), col("l_linestatus"))
         .agg(sum(col("l_quantity")).as("qty"), count(lit(1)).as("n"))
     }),
@@ -1947,7 +1947,7 @@ object Queries {
     // next to CUBE/ROLLUP: per-lang, per-source, and grand total in ONE
     // Expand pass (never three scans), disambiguated by grouping_id
     "grouping_sets_agg" -> ((s, dir) => {
-      Tables.parquet(s, s"$dir/documents.parquet").createOrReplaceTempView("graft_docs_gs")
+      t(s, dir, "documents").createOrReplaceTempView("graft_docs_gs")
       s.sql("""
         SELECT lang, source, grouping_id() AS gid, count(*) AS n,
                CAST(sum(n_chars) AS BIGINT) AS chars
@@ -1962,7 +1962,7 @@ object Queries {
     // the SQL-standard ntile closed form (first n mod k buckets get
     // one extra row), which the oracle's native ntile must reproduce.
     "ntile_length_quartiles" -> ((s, dir) => {
-      val docs = Tables.parquet(s, s"$dir/documents.parquet").select(col("doc_id"), col("n_chars"))
+      val docs = t(s, dir, "documents").select(col("doc_id"), col("n_chars"))
       val (ranked, release) = graft.tools.Ranks.globalRowNumberWithRelease(
         docs, "__r", 32, col("n_chars"), col("doc_id"))
       val n = ranked.count()
@@ -1996,7 +1996,7 @@ object Queries {
     // reproduce every double bit-for-bit (IEEE division of the same
     // exact integers).
     "global_rank_stats" -> ((s, dir) => {
-      val docs = Tables.parquet(s, s"$dir/documents.parquet").select(col("doc_id"), col("n_chars"))
+      val docs = t(s, dir, "documents").select(col("doc_id"), col("n_chars"))
       graft.tools.Ranks.globalRankStats(docs, col("n_chars"))
         .select(col("doc_id"), col("rank"), col("dense_rank"),
           col("percent_rank"), col("cume_dist"))
@@ -2008,7 +2008,7 @@ object Queries {
     // surface as a one-row frame
     "observed_quality_counters" -> ((s, dir) => {
       val obs = new org.apache.spark.sql.Observation()
-      Tables.parquet(s, s"$dir/documents.parquet")
+      t(s, dir, "documents")
         .observe(obs, count(lit(1)).as("n_docs"),
           sum(col("n_chars").cast("long")).as("chars"),
           count(when(col("lang") === "en", 1)).as("n_en"))
@@ -2023,7 +2023,7 @@ object Queries {
     // SURVEY §2.4 inherited aggregates: CUBE over two dims (subtotals +
     // grand total in one pass — Expand + partial aggregation).
     "cube_agg" -> ((s, dir) => {
-      Tables.parquet(s, s"$dir/lineitem.parquet")
+      t(s, dir, "lineitem")
         .cube(col("l_returnflag"), col("l_linestatus"))
         .agg(sum(col("l_quantity")).as("qty"), count(lit(1)).as("n"))
     }),
@@ -2037,12 +2037,12 @@ object Queries {
     // the partial (count, sum) pairs, which is exact here (counts are
     // longs, quantities integer-valued).
     "join_agg_nation" -> ((s, dir) => {
-      val li = Tables.parquet(s, s"$dir/lineitem.parquet")
+      val li = t(s, dir, "lineitem")
         .groupBy(col("l_orderkey"))
         .agg(count(lit(1)).as("__n"), sum(col("l_quantity")).as("__qty"))
-      val ord = Tables.parquet(s, s"$dir/orders.parquet").select(col("o_orderkey"), col("o_custkey"))
-      val cust = Tables.parquet(s, s"$dir/customer.parquet").select(col("c_custkey"), col("c_nationkey"))
-      val nat = Tables.parquet(s, s"$dir/nation.parquet")
+      val ord = t(s, dir, "orders").select(col("o_orderkey"), col("o_custkey"))
+      val cust = t(s, dir, "customer").select(col("c_custkey"), col("c_nationkey"))
+      val nat = t(s, dir, "nation")
       li.join(ord, col("l_orderkey") === col("o_orderkey"))
         .join(cust, col("o_custkey") === col("c_custkey"))
         .join(broadcast(nat), col("c_nationkey") === col("n_nationkey"))
@@ -2076,9 +2076,9 @@ object Queries {
       // floor so the gated run provably exercises the rewrite
       s.conf.set("spark.graft.bloomJoin.minBuildBytes", "-1")
       try {
-        val cust = Tables.parquet(s, s"$dir/customer.parquet")
+        val cust = t(s, dir, "customer")
           .where(col("c_custkey") % 13 === 0).select(col("c_custkey"))
-        val ord = Tables.parquet(s, s"$dir/orders.parquet")
+        val ord = t(s, dir, "orders")
           .select(col("o_orderkey"), col("o_custkey"))
         ord.join(cust, col("o_custkey") === col("c_custkey"))
           .groupBy(col("c_custkey"))
@@ -2093,8 +2093,8 @@ object Queries {
     // SURVEY §2.5 set ops (built-in): customers that placed orders vs
     // not, via INTERSECT / EXCEPT on key sets.
     "set_ops_counts" -> ((s, dir) => {
-      val custKeys = Tables.parquet(s, s"$dir/customer.parquet").select(col("c_custkey").as("k"))
-      val orderCust = Tables.parquet(s, s"$dir/orders.parquet").select(col("o_custkey").as("k"))
+      val custKeys = t(s, dir, "customer").select(col("c_custkey").as("k"))
+      val orderCust = t(s, dir, "orders").select(col("o_custkey").as("k"))
       val active = custKeys.intersect(orderCust)
       val inactive = custKeys.except(orderCust)
       active.agg(count(lit(1)).as("n")).withColumn("which", lit("active"))
@@ -2105,7 +2105,7 @@ object Queries {
     "window_top_orders" -> ((s, dir) => {
       val w = Window.partitionBy(col("o_custkey"))
         .orderBy(col("o_totalprice").desc, col("o_orderkey"))
-      Tables.parquet(s, s"$dir/orders.parquet")
+      t(s, dir, "orders")
         .withColumn("rn", row_number().over(w))
         .where(col("rn") <= 3)
         .select(col("o_custkey"), col("o_orderkey"), col("rn"))
@@ -2115,7 +2115,7 @@ object Queries {
     // events.ts is TIMESTAMP(NANOS) parquet — read as long ns
     // (spark.sql.legacy.parquet.nanosAsLong=true) and truncate to micros.
     "events_hourly" -> ((s, dir) => {
-      EventTs.toTimestamp(Tables.parquet(s, s"$dir/events.parquet"))
+      EventTs.toTimestamp(t(s, dir, "events"))
         .groupBy(date_trunc("hour", col("ts")).as("hour"), col("event_type"))
         .agg(count(lit(1)).as("n"), min(col("value")).as("vmin"), max(col("value")).as("vmax"))
     }),
@@ -2125,7 +2125,7 @@ object Queries {
     // DuckDB gate, which replays the epoch-aligned window starts with
     // integer micros arithmetic.
     "events_sliding" -> ((s, dir) => {
-      EventTs.toTimestamp(Tables.parquet(s, s"$dir/events.parquet"))
+      EventTs.toTimestamp(t(s, dir, "events"))
         .groupBy(window(col("ts"), "1 hour", "30 minutes"), col("event_type"))
         .agg(count(lit(1)).as("n"), min(col("value")).as("vmin"),
           max(col("value")).as("vmax"))
@@ -2139,7 +2139,7 @@ object Queries {
     "interarrival_histogram" -> ((s, dir) => {
       val w = Window.partitionBy(col("user_id"))
         .orderBy(col("ts"), col("event_id"))
-      EventTs.toNanos(Tables.parquet(s, s"$dir/events.parquet"))
+      EventTs.toNanos(t(s, dir, "events"))
         .select(col("user_id"), col("ts"), col("event_id"))
         .withColumn("next_ts", lead(col("ts"), 1).over(w))
         .where(col("next_ts").isNotNull)
@@ -2163,7 +2163,7 @@ object Queries {
         .orderBy(col("ts"), col("event_id"))
       // NULL users excluded on both engines — the streaming twin's
       // keyed primitive-Long state cannot hold them (shared oracle)
-      val changes = EventTs.toTimestamp(Tables.parquet(s, s"$dir/events.parquet"))
+      val changes = EventTs.toTimestamp(t(s, dir, "events"))
         .where(col("user_id").isNotNull)
         .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
         .withColumn("__prev", lag(col("event_type"), 1).over(w))
@@ -2189,7 +2189,7 @@ object Queries {
     // instead of the six separate rank passes + final re-aggregation
     // that previously re-scanned events seven times.
     "rfm_segments" -> ((s, dir) => {
-      val per = EventTs.toTimestamp(Tables.parquet(s, s"$dir/events.parquet"))
+      val per = EventTs.toTimestamp(t(s, dir, "events"))
         .where(col("event_type") === "purchase")
         .groupBy(col("user_id"))
         .agg(unix_micros(max(col("ts"))).as("rec"),
@@ -2215,7 +2215,7 @@ object Queries {
     "event_transitions" -> ((s, dir) => {
       val w = Window.partitionBy(col("user_id"))
         .orderBy(col("ts"), col("event_id"))
-      EventTs.toTimestamp(Tables.parquet(s, s"$dir/events.parquet"))
+      EventTs.toTimestamp(t(s, dir, "events"))
         .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
         .withColumn("next_type", lead(col("event_type"), 1).over(w))
         .where(col("next_type").isNotNull)
@@ -2237,7 +2237,7 @@ object Queries {
     // predicate on the window time (never in-plan by id — the pushdown
     // gotcha).
     "events_hourly_stream" -> ((s, dir) => {
-      val schema = Tables.parquet(s, s"$dir/events.parquet").schema
+      val schema = t(s, dir, "events").schema
       // the file stream source wants a DIRECTORY; select just the
       // events file out of the sf dir with a glob filter
       def src = EventTs.toTimestamp(s.readStream.schema(schema)
@@ -2272,7 +2272,7 @@ object Queries {
     // drive the final watermark past every real window (their own
     // window never closes, so the sentinel self-filters).
     "stream_distinct_users" -> ((s, dir) => {
-      val schema = Tables.parquet(s, s"$dir/events.parquet").schema
+      val schema = t(s, dir, "events").schema
       val src = EventTs.toTimestamp(s.readStream.schema(schema)
         .option("pathGlobFilter", "events.parquet").parquet(dir))
         .select(col("event_id"), col("ts"), col("user_id"), col("event_type"))
@@ -2370,9 +2370,9 @@ object Queries {
     // the same ts <= h1 restriction).
     "stream_resample_ffill" -> ((s, dir) => {
       import s.implicits._
-      val schema = Tables.parquet(s, s"$dir/events.parquet").schema
+      val schema = t(s, dir, "events").schema
       val H = 3600000000L
-      val b = EventTs.toTimestamp(Tables.parquet(s, s"$dir/events.parquet"))
+      val b = EventTs.toTimestamp(t(s, dir, "events"))
         .where(col("user_id").isNotNull)
         .agg(min(unix_micros(col("ts"))).as("mn"),
           max(unix_micros(col("ts"))).as("mx")).head()
@@ -2420,7 +2420,7 @@ object Queries {
     // epoch-micros-arithmetic oracle as the batch events_sliding.
     // Append mode + sentinel flush, like the tumbling twin.
     "events_sliding_stream" -> ((s, dir) => {
-      val schema = Tables.parquet(s, s"$dir/events.parquet").schema
+      val schema = t(s, dir, "events").schema
       def src = EventTs.toTimestamp(s.readStream.schema(schema)
         .option("pathGlobFilter", "events.parquet").parquet(dir))
       val sentinel = src.where(col("event_id") % 100 === 0)
@@ -2452,7 +2452,7 @@ object Queries {
     // path — not just windowed aggregation — is hash-gated.
     "stream_dedup_first_seen" -> ((s, dir) => {
       import s.implicits._
-      val schema = Tables.parquet(s, s"$dir/documents.parquet").schema
+      val schema = t(s, dir, "documents").schema
       def src = s.readStream.schema(schema)
         .option("pathGlobFilter", "documents.parquet").parquet(dir)
         .select(col("doc_id"), col("text"))
@@ -2485,7 +2485,7 @@ object Queries {
     // table must hash-match the BATCH scd2_user_states oracle.
     "stream_scd2" -> ((s, dir) => {
       import s.implicits._
-      val schema = Tables.parquet(s, s"$dir/events.parquet").schema
+      val schema = t(s, dir, "events").schema
       def src = EventTs.toTimestamp(s.readStream.schema(schema)
         .option("pathGlobFilter", "events.parquet").parquet(dir))
       // far-future SENTINEL rows (user -1, ts + ~100 years): on a
@@ -2534,7 +2534,7 @@ object Queries {
     // gated output is the deterministic survivor KEY SET: the distinct
     // texts of the planted corpus.
     "stream_dedup_watermark" -> ((s, dir) => {
-      val schema = Tables.parquet(s, s"$dir/documents.parquet").schema
+      val schema = t(s, dir, "documents").schema
       def src = s.readStream.schema(schema)
         .option("pathGlobFilter", "documents.parquet").parquet(dir)
         .select(col("doc_id"), col("text"))
@@ -2563,7 +2563,7 @@ object Queries {
     // and box-filtered — the whole streaming-ingest → prunable-dataset
     // → cx query cycle must land on the plain relational box filter
     "stream_geoparquet_sink" -> ((s, dir) => {
-      val schema = Tables.parquet(s, s"$dir/customer.parquet").schema
+      val schema = t(s, dir, "customer").schema
       val pts = s.readStream.schema(schema)
         .option("pathGlobFilter", "customer.parquet").parquet(dir)
         .withColumn("px", ((col("c_custkey") * 7919) % 1000).cast("double"))
@@ -2602,7 +2602,7 @@ object Queries {
     "stream_zorder_travel" -> ((s, dir) => {
       val base = processTmpDir(s, "szt", dir)
       val zcols = Seq("l_quantity", "l_extendedprice")
-      val li = Tables.parquet(s, s"$dir/lineitem.parquet").select(col("l_orderkey"),
+      val li = t(s, dir, "lineitem").select(col("l_orderkey"),
         col("l_returnflag"), col("l_quantity"), col("l_extendedprice"))
       (0 to 2).foreach { g =>
         li.where(col("l_orderkey") % 3 === g).coalesce(1)
@@ -2659,7 +2659,7 @@ object Queries {
     "zorder_changes_read" -> ((s, dir) => {
       val out = processTmpDir(s, "zchg", dir)
       val zcols = Seq("l_quantity", "l_extendedprice")
-      val li = Tables.parquet(s, s"$dir/lineitem.parquet").select(col("l_orderkey"),
+      val li = t(s, dir, "lineitem").select(col("l_orderkey"),
         col("l_returnflag"), col("l_quantity"), col("l_extendedprice"))
       graft.io.GeoParquet.packZOrderToParquet(
         li.where(col("l_orderkey") % 4 === 0), zcols, out, numPartitions = 3)
@@ -2697,7 +2697,7 @@ object Queries {
     "zorder_stats_history" -> ((s, dir) => {
       val out = processTmpDir(s, "zsh", dir)
       val zcols = Seq("l_quantity", "l_extendedprice")
-      val li = Tables.parquet(s, s"$dir/lineitem.parquet").select(col("l_orderkey"),
+      val li = t(s, dir, "lineitem").select(col("l_orderkey"),
         col("l_returnflag"), col("l_quantity"), col("l_extendedprice"))
       graft.io.GeoParquet.packZOrderToParquet(
         li.where(col("l_orderkey") % 4 === 0), zcols, out, numPartitions = 3)
@@ -2733,7 +2733,7 @@ object Queries {
     // (the replay-stability property StreamingSpec checks); the oracle
     // replays the md5 threshold AND the 8-gram eval overlap
     "stream_ingest_filter" -> ((s, dir) => {
-      val docs = Tables.parquet(s, s"$dir/documents.parquet")
+      val docs = t(s, dir, "documents")
       val eval = docs.where(col("doc_id") % 10 === 0).select(col("doc_id"), col("text"))
       def src = s.readStream.schema(docs.schema)
         .option("pathGlobFilter", "documents.parquet").parquet(dir)
@@ -2763,7 +2763,7 @@ object Queries {
     // broadcast when small; the stream buffers no state). Must produce
     // the same survivors as the batch twin incremental_dedup.
     "stream_incremental_dedup" -> ((s, dir) => {
-      val docs = Tables.parquet(s, s"$dir/documents.parquet")
+      val docs = t(s, dir, "documents")
       val corpus = docs.where(col("doc_id") % 3 === 0).select(col("doc_id"), col("text"))
       def src = s.readStream.schema(docs.schema)
         .option("pathGlobFilter", "documents.parquet").parquet(dir)
@@ -2793,7 +2793,7 @@ object Queries {
     // so any batch split yields the same survivors as the batch twin
     // near_dedup_incremental — and the SAME oracle gates both.
     "stream_near_dedup" -> ((s, dir) => {
-      val docs = Tables.parquet(s, s"$dir/documents.parquet")
+      val docs = t(s, dir, "documents")
       val corpus = docs.where(col("doc_id") % 3 === 0).select(col("doc_id"), col("text"))
       def src = s.readStream.schema(docs.schema)
         .option("pathGlobFilter", "documents.parquet").parquet(dir)
@@ -2828,7 +2828,7 @@ object Queries {
     // sessions and is dropped on the result table, exactly like the
     // custom-state twin below.
     "event_sessions_stream" -> ((s, dir) => {
-      val schema = Tables.parquet(s, s"$dir/events.parquet").schema
+      val schema = t(s, dir, "events").schema
       def src = EventTs.toTimestamp(s.readStream.schema(schema)
         .option("pathGlobFilter", "events.parquet").parquet(dir))
       val sentinel = src.where(col("event_id") % 100 === 0)
@@ -2866,7 +2866,7 @@ object Queries {
     // streaming plan (an in-plan id predicate is pushed below the
     // EventTimeWatermark node and would starve watermark tracking).
     "event_sessions_dynamic_stream" -> ((s, dir) => {
-      val schema = Tables.parquet(s, s"$dir/events.parquet").schema
+      val schema = t(s, dir, "events").schema
       def src = EventTs.toTimestamp(s.readStream.schema(schema)
         .option("pathGlobFilter", "events.parquet").parquet(dir))
       val sentinel = src.where(col("event_id") % 100 === 0)
@@ -2905,7 +2905,7 @@ object Queries {
     // sentinel output is filtered.
     "event_sessions_stream_state" -> ((s, dir) => {
       import s.implicits._
-      val schema = Tables.parquet(s, s"$dir/events.parquet").schema
+      val schema = t(s, dir, "events").schema
       def src = EventTs.toTimestamp(s.readStream.schema(schema)
         .option("pathGlobFilter", "events.parquet").parquet(dir))
       // any window of 100 consecutive event_ids contains a sentinel —
@@ -2943,7 +2943,7 @@ object Queries {
       // NULL users excluded on both engines (shared oracle): the
       // streaming twin keys primitive-Long state and cannot hold them,
       // and a window partition would group NULL keys into one quota
-      EventTs.toTimestamp(Tables.parquet(s, s"$dir/events.parquet"))
+      EventTs.toTimestamp(t(s, dir, "events"))
         .where(col("user_id").isNotNull)
         .withColumn("win", expr("unix_micros(ts) div 3600000000"))
         .withColumn("rn", row_number().over(w))
@@ -2959,7 +2959,7 @@ object Queries {
     // shape: the admitted SET is replay-stable by construction.
     "stream_rate_limit" -> ((s, dir) => {
       import s.implicits._
-      val schema = Tables.parquet(s, s"$dir/events.parquet").schema
+      val schema = t(s, dir, "events").schema
       def src = EventTs.toTimestamp(s.readStream.schema(schema)
         .option("pathGlobFilter", "events.parquet").parquet(dir))
       val sentinel = src.where(col("event_id") % 100 === 0)
@@ -2994,7 +2994,7 @@ object Queries {
     // gaps-and-islands SQL oracle: a session breaks when the gap to the
     // previous event is >= 30 minutes (Spark session end is exclusive).
     "event_sessions" -> ((s, dir) => {
-      EventTs.toTimestamp(Tables.parquet(s, s"$dir/events.parquet"))
+      EventTs.toTimestamp(t(s, dir, "events"))
         .groupBy(session_window(col("ts"), "30 minutes"), col("event_type"))
         .agg(count(lit(1)).as("n"), min(col("ts")).as("session_start"))
         .select(col("event_type"), col("session_start"), col("n"))
@@ -3010,7 +3010,7 @@ object Queries {
     // reach past the break that closed them, so the per-user cummax
     // equals the in-session cummax at every break test).
     "event_sessions_dynamic" -> ((s, dir) => {
-      EventTs.toTimestamp(Tables.parquet(s, s"$dir/events.parquet"))
+      EventTs.toTimestamp(t(s, dir, "events"))
         .groupBy(col("user_id"),
           session_window(col("ts"),
             when(col("event_type") === "click", "30 minutes")
@@ -3084,7 +3084,7 @@ object Queries {
     // (t, delta) rows is fixed), so the gauge gates exactly: the
     // oracle replays the same ordered running sum.
     "interval_concurrency" -> ((s, dir) => {
-      val iv = EventTs.toTimestamp(Tables.parquet(s, s"$dir/events.parquet"))
+      val iv = EventTs.toTimestamp(t(s, dir, "events"))
         .select(unix_micros(col("ts")).as("st"),
           (unix_micros(col("ts")) + 1800000000L).as("en"))
       graft.tools.Ranks.sweepConcurrency(iv, "st", "en")
@@ -3100,7 +3100,7 @@ object Queries {
     "rolling_user_counts" -> ((s, dir) => {
       val w = Window.partitionBy(col("user_id")).orderBy(col("ts"))
         .rangeBetween(-3600L * 1000000000L, 0L) // 1h in nanos
-      EventTs.toNanos(Tables.parquet(s, s"$dir/events.parquet"))
+      EventTs.toNanos(t(s, dir, "events"))
         .select(col("event_id"), col("user_id"), col("ts"))
         .withColumn("n_prev_hour", count(lit(1)).over(w))
         .select(col("event_id"), col("n_prev_hour"))
@@ -3113,7 +3113,7 @@ object Queries {
     // stay int64 nanos on the Spark side (nanosAsLong); ordering is
     // identical either way.
     "asof_join" -> ((s, dir) => {
-      val ev = Tables.parquet(s, s"$dir/events.parquet")
+      val ev = t(s, dir, "events")
       val clicks = ev.where(col("event_type") === "click")
         .select(col("event_id"), col("user_id"), col("ts"))
       val purchases = ev.where(col("event_type") === "purchase")
@@ -3125,7 +3125,7 @@ object Queries {
 
     // Forward as-of: the user's NEXT purchase at-or-after each click
     "asof_join_fwd" -> ((s, dir) => {
-      val ev = Tables.parquet(s, s"$dir/events.parquet")
+      val ev = t(s, dir, "events")
       val clicks = ev.where(col("event_type") === "click")
         .select(col("event_id"), col("user_id"), col("ts"))
       val purchases = ev.where(col("event_type") === "purchase")
@@ -3138,10 +3138,10 @@ object Queries {
     // Interval overlap join with the 1-D PBSM reference-bin dedup:
     // lineitem quantity bands vs nation bands, pair emitted exactly once
     "interval_join" -> ((s, dir) => {
-      val li = Tables.parquet(s, s"$dir/lineitem.parquet").select(col("l_orderkey"),
+      val li = t(s, dir, "lineitem").select(col("l_orderkey"),
         col("l_quantity").as("qlo"),
         (col("l_quantity") + col("l_linenumber")).as("qhi"))
-      val bands = Tables.parquet(s, s"$dir/nation.parquet").select(col("n_nationkey"),
+      val bands = t(s, dir, "nation").select(col("n_nationkey"),
         (col("n_nationkey") * lit(2.0)).as("lo"),
         (col("n_nationkey") * lit(2.0) + lit(5.0)).as("hi"))
       graft.tools.Joins.intervalOverlapJoin(li, bands, "qlo", "qhi", "lo", "hi",
@@ -3154,8 +3154,8 @@ object Queries {
     // quantities matched to overlapping nation-derived bands via the
     // 1-D bin equi-join + exact BETWEEN residual (no nested loop).
     "range_join" -> ((s, dir) => {
-      val li = Tables.parquet(s, s"$dir/lineitem.parquet").select(col("l_orderkey"), col("l_quantity"))
-      val bands = Tables.parquet(s, s"$dir/nation.parquet").select(col("n_nationkey"),
+      val li = t(s, dir, "lineitem").select(col("l_orderkey"), col("l_quantity"))
+      val bands = t(s, dir, "nation").select(col("n_nationkey"),
         (col("n_nationkey") * lit(2.0)).as("lo"),
         (col("n_nationkey") * lit(2.0) + lit(5.0)).as("hi"))
       graft.tools.Joins.rangeJoin(li, bands, "l_quantity", "lo", "hi", binSize = 4.0)
@@ -3167,7 +3167,7 @@ object Queries {
     // but only within 6 hours — farther matches null out (merge_asof
     // tolerance semantics; ts stays int64 nanos, 6h = 21_600e9 ns).
     "asof_join_tol" -> ((s, dir) => {
-      val ev = EventTs.toNanos(Tables.parquet(s, s"$dir/events.parquet"))
+      val ev = EventTs.toNanos(t(s, dir, "events"))
       val clicks = ev.where(col("event_type") === "click")
         .select(col("event_id"), col("user_id"), col("ts"))
       val purchases = ev.where(col("event_type") === "purchase")
@@ -3181,7 +3181,7 @@ object Queries {
     // prior and next purchase, backward winning ties — one keyed
     // shuffle, two ordered windows over the same partitioning.
     "asof_join_near" -> ((s, dir) => {
-      val ev = Tables.parquet(s, s"$dir/events.parquet")
+      val ev = t(s, dir, "events")
       val clicks = ev.where(col("event_type") === "click")
         .select(col("event_id"), col("user_id"), col("ts"))
       val purchases = ev.where(col("event_type") === "purchase")
@@ -3212,7 +3212,7 @@ object Queries {
     // with nulls (left semantics).
     "sjoin_nearest" -> ((s, dir) => {
       val cust = custPoints(s, dir).select(col("c_custkey").as("id"), col("pt"))
-      val supp = Tables.parquet(s, s"$dir/supplier.parquet")
+      val supp = t(s, dir, "supplier")
         .withColumn("spt", st_point(((col("s_suppkey") * 7919) % 1000).cast("double"),
           ((col("s_suppkey") * 104729) % 1000).cast("double")))
         .select(col("s_suppkey").as("nn_id"), col("spt"))
@@ -3227,7 +3227,7 @@ object Queries {
     // plans must produce the identical nearest assignment.
     "sjoin_nearest_bcast" -> ((s, dir) => {
       val cust = custPoints(s, dir).select(col("c_custkey").as("id"), col("pt"))
-      val supp = Tables.parquet(s, s"$dir/supplier.parquet")
+      val supp = t(s, dir, "supplier")
         .withColumn("spt", st_point(((col("s_suppkey") * 7919) % 1000).cast("double"),
           ((col("s_suppkey") * 104729) % 1000).cast("double")))
         .select(col("s_suppkey").as("nn_id"), col("spt"))
@@ -3241,7 +3241,7 @@ object Queries {
     // keeps the per-key top-k partial map-side).
     "sjoin_knn" -> ((s, dir) => {
       val cust = custPoints(s, dir).select(col("c_custkey").as("id"), col("pt"))
-      val supp = Tables.parquet(s, s"$dir/supplier.parquet")
+      val supp = t(s, dir, "supplier")
         .withColumn("spt", st_point(((col("s_suppkey") * 7919) % 1000).cast("double"),
           ((col("s_suppkey") * 104729) % 1000).cast("double")))
         .select(col("s_suppkey").as("nn_id"), col("spt"))
@@ -3259,7 +3259,7 @@ object Queries {
     // scale-up answer measured in BENCH_sf1.
     "sjoin_knn_adaptive" -> ((s, dir) => {
       val cust = custPoints(s, dir).select(col("c_custkey").as("id"), col("pt"))
-      val supp = Tables.parquet(s, s"$dir/supplier.parquet")
+      val supp = t(s, dir, "supplier")
         .withColumn("spt", st_point(((col("s_suppkey") * 7919) % 1000).cast("double"),
           ((col("s_suppkey") * 104729) % 1000).cast("double")))
         .select(col("s_suppkey").as("nn_id"), col("spt"))
@@ -3270,14 +3270,14 @@ object Queries {
 
     // Vocabulary stats via explode (Generate): exact distinct tokens.
     "vocab_stats" -> ((s, dir) => {
-      Tables.parquet(s, s"$dir/documents.parquet")
+      t(s, dir, "documents")
         .select(explode(regexp_extract_all(col("text"), lit("\\S+"), lit(0))).as("tok"))
         .agg(count_distinct(col("tok")).as("vocab"), count(lit(1)).as("total_tokens"))
     }),
 
     // Pipeline: exact dedup on documents.
     "dedup_exact" -> ((s, dir) => {
-      Tables.parquet(s, s"$dir/documents.parquet")
+      t(s, dir, "documents")
         .groupBy(col("text"))
         .agg(min(col("doc_id")).as("keep_id"), count(lit(1)).as("dup_cnt"))
         .select(col("keep_id"), col("dup_cnt"))
@@ -3285,7 +3285,7 @@ object Queries {
 
     // Pipeline: token/char counts.
     "token_stats" -> ((s, dir) => {
-      Tables.parquet(s, s"$dir/documents.parquet").select(col("doc_id"),
+      t(s, dir, "documents").select(col("doc_id"),
         size(regexp_extract_all(col("text"), lit("\\S+"), lit(0))).as("tokens"),
         length(col("text")).as("chars"))
     })

@@ -113,6 +113,10 @@ class TablesSpec extends AnyFunSuite {
     assert(jobsDuring(tables.foreach(spark.read.parquet(_))) >= tables.size,
       "the listener must see spark.read.parquet's schema inference jobs")
     assert(jobsDuring(tables.foreach(Tables.parquet(spark, _))) == 0)
+    // the catalog's (dir, name) form opens the same file
+    val customer = tables.find(_.endsWith("/customer.parquet")).get
+    assert(outcome(Tables.table(spark, new java.io.File(customer).getParent, "customer")) ==
+      outcome(spark.read.parquet(customer)))
   }
 
   test("a missing path raises spark.read.parquet's error") {
@@ -131,12 +135,15 @@ class TablesSpec extends AnyFunSuite {
       assert(got.schema == spark.read.parquet(dir.getPath).schema)
       assert(got.selectExpr("sum(twice)").head.getLong(0) == 9900L)
       // Spark's listing drops a root file whose name starts with `_`
-      // or `.`; the open must not read it behind Spark's back
-      val hidden = new java.io.File(dir, "_hidden.parquet")
-      java.nio.file.Files.copy(new java.io.File(tables.head).toPath, hidden.toPath)
+      // or `.` or ends in `._COPYING_`; the open must not read it
+      // behind Spark's back
       def rows(open: => DataFrame) = outcome(open).map(_ => open.count())
-      assert(rows(Tables.parquet(spark, hidden.getPath)) ==
-        rows(spark.read.parquet(hidden.getPath)))
+      for (name <- Seq("_hidden.parquet", ".hidden.parquet", "part.parquet._COPYING_")) {
+        val hidden = new java.io.File(dir, name)
+        java.nio.file.Files.copy(new java.io.File(tables.head).toPath, hidden.toPath)
+        assert(rows(Tables.parquet(spark, hidden.getPath)) ==
+          rows(spark.read.parquet(hidden.getPath)), name)
+      }
     } finally org.apache.commons.io.FileUtils.deleteDirectory(dir)
   }
 }

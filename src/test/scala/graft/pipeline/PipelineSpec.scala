@@ -711,6 +711,34 @@ class PipelineSpec extends AnyFunSuite {
     }
   }
 
+  test("connected components: a fixpoint reached in the cap round is returned") {
+    def comps(df: org.apache.spark.sql.DataFrame) = {
+      val pairs = df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      df.unpersist()
+      pairs
+    }
+    // path 0-1-2-3: label propagation lowers labels in rounds 1 and 2,
+    // so the labels are final after round 2 but round 2 still changed
+    val path = Seq((0L, 1L), (1L, 2L), (2L, 3L)).toDF("a", "b")
+    assert(comps(Dedup.connectedComponents(path, "a", "b", maxIters = 2)) ==
+      (0L to 3L).map(_ -> 0L).toSet)
+    val capped = intercept[IllegalStateException](
+      Dedup.connectedComponents(path, "a", "b", maxIters = 1))
+    assert(capped.getMessage.contains("1 labels would still change in round 2"),
+      capped.getMessage)
+    // a star given centre-first is at the fixpoint before any round:
+    // maxIters = 0 returns it, and the star variant's labels come out
+    // in the (node, min) orientation, not the input's
+    val star = Seq((0L, 1L), (0L, 2L), (0L, 3L)).toDF("a", "b")
+    assert(comps(Dedup.connectedComponents(star, "a", "b", maxIters = 0)) ==
+      (0L to 3L).map(_ -> 0L).toSet)
+    assert(comps(Dedup.connectedComponentsStar(star, "a", "b", maxIters = 0)) ==
+      (0L to 3L).map(_ -> 0L).toSet)
+    val chain = (0 until 300).map(i => (i.toLong, (i + 1).toLong)).toDF("a", "b")
+    intercept[IllegalStateException](
+      Dedup.connectedComponentsStar(chain, "a", "b", maxIters = 1))
+  }
+
   test("multimodal decodePixelStats: exact RGB sums through the codec") {
     val img = new java.awt.image.BufferedImage(3, 2,
       java.awt.image.BufferedImage.TYPE_INT_RGB)
